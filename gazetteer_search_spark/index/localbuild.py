@@ -5,10 +5,15 @@ scheduler overhead — ~5 s for a 250-doc batch, ~100x the per-doc cost of the
 batch build. At streaming cadence that bounds ingest latency. The cure is to
 stop scheduling distributed work for data that fits one pandas frame:
 
-    ONE Spark job collects the batch (tokenize + row-level derivations:
-    content_sha256, the name-key SQL expression — everything that needs
-    Catalyst), then statistics, frozen-stats BM25 scoring, salting, block
-    packing and every parquet write happen driver-side with numpy/pyarrow.
+    the batch is an in-memory Arrow table (``POST /bulk`` builds one; a
+    DataFrame batch is collected once, its only Spark job). The row-level
+    derivations that need Catalyst — doc_id hash, content_sha256, the
+    name-key SQL expression, native tokens — are one projection over
+    ``spark.createDataFrame(table)``, which the optimizer evaluates on the
+    driver (zero jobs); pandas tokens come from ``tokenize_pandas`` on the
+    driver (segments._derive_batch). Statistics, frozen-stats BM25 scoring,
+    salting, block packing and every parquet write then happen driver-side
+    with numpy/pyarrow (this module).
 
 Output is LAYOUT-IDENTICAL to a build_index segment (same parquet schemas,
 same hive partition dirs, same metadata files), pinned by a byte-level parity

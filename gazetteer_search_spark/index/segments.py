@@ -157,9 +157,49 @@ def _base_rules(index_dir: str):
     return load_index_rules(index_dir)
 
 
+#: Serving-tier doc bound: bases up to this many docs take the Spark-free
+#: micro-batch forms of add_segment (local build) and delete_by_keys
+#: (pyarrow key resolution); larger bases keep the distributed forms.
+LOCAL_MAX_BASE_DOCS = 5_000_000
+
+
+def _base_fits_local(index_dir: str) -> bool:
+    """Base-size half of the micro-batch gate, read via pyarrow (no Spark
+    work before the local/distributed routing decision)."""
+    import pyarrow.dataset as ds_mod
+
+    n = (
+        ds_mod.dataset(IndexPaths(index_dir).corpus_stats)
+        .to_table(columns=["n_docs"])["n_docs"][0]
+        .as_py()
+    )
+    return int(n) <= LOCAL_MAX_BASE_DOCS
+
+
+def _doc_id_col(columns, clustered: bool):
+    """Segment doc_id: the batch's own ``doc_id`` column, else the
+    ``cli build-index`` hash of (repo, path, commit)."""
+    c = (
+        F.col("doc_id")
+        if "doc_id" in columns
+        else F.xxhash64("repo", "path", "commit").bitwiseAND(
+            F.lit((1 << 62) - 1)
+        )
+    )
+    if clustered:
+        # the base holds DENSE clustered ids [0, n); a batch id colliding
+        # with an unrelated base doc would alias two different files in the
+        # multi-generation merge. Segment ids get bit 61 set — disjoint
+        # from any dense range, stable across re-upserts of the same file
+        # (id is a function of the batch row), and the tombstone mechanism
+        # is (repo, path)-keyed so supersession never needed id equality.
+        c = c.bitwiseAND(F.lit((1 << 61) - 1)).bitwiseOR(F.lit(1 << 61))
+    return c
+
+
 def add_segment(
     spark: SparkSession,
-    corpus: DataFrame,
+    corpus,
     index_dir: str,
     key_cols: tuple[str, ...] = ("repo", "path"),
     n_buckets: int = 8,
@@ -167,9 +207,9 @@ def add_segment(
     tokenizer: str = "pandas",
     extra_fields: dict[str, str] | None = None,
     local_threshold: int = 5000,
-    local_max_base_docs: int = 5_000_000,
 ) -> Index:
-    """Upsert ``corpus`` into the index as a new generation.
+    """Upsert ``corpus`` (a DataFrame or an in-memory ``pyarrow.Table`` of
+    corpus rows) into the index as a new generation.
 
     Docs in the batch supersede every older-generation doc sharing their
     ``key_cols`` value (AddressesImporter's per-batch delete-by-id +
@@ -185,38 +225,23 @@ def add_segment(
     disable explicitly.
 
     Batches up to ``local_threshold`` rows (against bases up to
-    ``local_max_base_docs`` docs — the serving-tier bound) build through the
-    SPARK-FREE micro-batch path (index/localbuild.py): one collect job for
-    tokenize + row-level Catalyst derivations, then driver-side numpy/pyarrow
-    for everything else — layout-identical output without ~8 stages of
-    per-segment scheduler overhead (VERDICT r3 weak #2). ``local_threshold=0``
-    forces the distributed path."""
+    :data:`LOCAL_MAX_BASE_DOCS` docs) build through the SPARK-FREE
+    micro-batch path (index/localbuild.py): a DataFrame batch is collected
+    once as Arrow (one job; a ``pyarrow.Table`` costs none), the row-level
+    Catalyst derivations evaluate on the driver (:func:`_derive_batch`,
+    zero jobs), and driver-side numpy/pyarrow does everything else —
+    layout-identical output without ~8 stages of per-segment scheduler
+    overhead (VERDICT r3 weak #2). ``local_threshold=0`` forces the
+    distributed path."""
     segs = list_segments(index_dir)
     seg_id = (segs[-1]["seg_id"] + 1) if segs else 1
     seg_dir = os.path.join(_seg_root(index_dir), f"seg_{seg_id:05d}")
 
-    _pre_meta = b.read_index_meta(index_dir)
-    if "doc_id" not in corpus.columns:
-        corpus = corpus.withColumn(
-            "doc_id",
-            F.xxhash64("repo", "path", "commit").bitwiseAND(
-                F.lit((1 << 62) - 1)
-            ),
-        )
-    if _pre_meta.get("clustered_by"):
-        # the base holds DENSE clustered ids [0, n); a batch id colliding
-        # with an unrelated base doc would alias two different files in the
-        # multi-generation merge. Segment ids get bit 61 set — disjoint
-        # from any dense range, stable across re-upserts of the same file
-        # (id is a function of the batch row), and the tombstone mechanism
-        # is (repo, path)-keyed so supersession never needed id equality.
-        corpus = corpus.withColumn(
-            "doc_id",
-            F.col("doc_id")
-            .bitwiseAND(F.lit((1 << 61) - 1))
-            .bitwiseOR(F.lit(1 << 61)),
-        )
-
+    # the base's persisted name-key SQL keys this segment's name_ordinal the
+    # SAME way (ADVICE r3: a custom-keyed base must not get default-keyed
+    # segments — distinct=True would then collapse by a different key per
+    # generation)
+    base_meta = b.read_index_meta(index_dir)
     # field mapping + base metadata via pyarrow/json — no Spark work before
     # the local/distributed routing decision (micro-batch cadence pays this
     # preamble per segment)
@@ -229,31 +254,26 @@ def add_segment(
                 r["field"]: r["source_col"]
                 for r in _ds.dataset(fs_path).to_table().to_pylist()
             }
-    # the base's persisted name-key SQL keys this segment's name_ordinal the
-    # SAME way (ADVICE r3: a custom-keyed base must not get default-keyed
-    # segments — distinct=True would then collapse by a different key per
-    # generation)
-    base_meta = _pre_meta
 
-    if local_threshold > 0:
-        import pyarrow.dataset as _ds
-
-        base_n = int(
-            _ds.dataset(IndexPaths(index_dir).corpus_stats)
-            .to_table(columns=["n_docs"])["n_docs"][0]
-            .as_py()
+    if local_threshold > 0 and _base_fits_local(index_dir):
+        table = (
+            corpus.limit(local_threshold + 1).toArrow()
+            if isinstance(corpus, DataFrame)
+            else corpus
         )
-        if (
-            base_n <= local_max_base_docs
-            and corpus.limit(local_threshold + 1).count() <= local_threshold
-        ):
+        if table.num_rows <= local_threshold:
             return _add_segment_local(
-                spark, corpus, index_dir, seg_dir, seg_id,
+                spark, table, index_dir, seg_dir, seg_id,
                 key_cols=key_cols, n_buckets=n_buckets,
                 postings_per_group=postings_per_group, tokenizer=tokenizer,
                 extra_fields=extra_fields or None, base_meta=base_meta,
             )
 
+    if not isinstance(corpus, DataFrame):
+        corpus = spark.createDataFrame(corpus)
+    corpus = corpus.withColumn(
+        "doc_id", _doc_id_col(corpus.columns, bool(base_meta.get("clustered_by")))
+    )
     frozen = frozen_stats_from_base(spark, index_dir)
     idx = b.build_index(
         spark,
@@ -334,9 +354,104 @@ def add_segment(
     return idx
 
 
+def _derive_batch(
+    spark: SparkSession,
+    table,
+    *,
+    clustered: bool,
+    name_key: str,
+    tokenizer: str,
+    field_map: dict[str, str],
+    stored_content: bool,
+):
+    """A micro-batch's row-level derivations, as the pandas frame
+    ``build_segment_index_local`` consumes: doc_id (:func:`_doc_id_col`),
+    content_sha256, the base's name-key SQL and, for
+    ``tokenizer="native"``, the token lists are ONE Catalyst projection
+    over ``spark.createDataFrame(table)``. The optimizer folds a projection
+    over a LocalRelation into the relation, so the collect evaluates on the
+    driver and schedules ZERO Spark jobs — Spark's own semantics, nothing
+    reimplemented. ``tokenizer="pandas"`` calls the kernel that
+    ``tokens_pandas_udf`` wraps (``tokenize_pandas``) on the driver."""
+    import pandas as pd
+
+    from gazetteer_search_spark.analyzer.tokenizer import tokenize_pandas
+    from gazetteer_search_spark.search import bm25
+
+    if tokenizer not in ("pandas", "native"):
+        raise ValueError(f"unknown tokenizer {tokenizer!r}")
+    # token column -> source column (content, then one per mapped field)
+    tok_src = {
+        "tokens": "content",
+        **{f"_ftok_{f}": c for f, c in sorted(field_map.items())},
+    }
+    sel = [
+        _doc_id_col(table.column_names, clustered).alias("doc_id"),
+        "repo", "path", "commit", "lang",
+        F.sha2("content", 256).alias("content_sha256"),
+        # a store_content base keeps stored content across generations —
+        # serving snippets must hydrate segment-resident winners too
+        *(["content"] if stored_content else []),
+        F.expr(name_key).cast("string").alias("_nk"),
+    ]
+    if tokenizer == "native":
+        sel += [
+            bm25.tokens_col(F.col(src), "native").alias(name)
+            for name, src in tok_src.items()
+        ]
+    df = spark.createDataFrame(table).select(*sel)
+    pdf = pd.DataFrame(df.collect(), columns=df.columns)
+    if tokenizer == "pandas":
+        for name, src in tok_src.items():
+            pdf[name] = tokenize_pandas(table.column(src).to_pandas()).tolist()
+    return pdf
+
+
+def _key_doc_ids(
+    index_dir: str, keys, key_cols: tuple[str, ...], live: bool = False
+) -> np.ndarray:
+    """Sorted unique doc_ids of the docs (every payload generation) whose
+    ``key_cols`` tuple is a row of the ``keys`` frame: pyarrow reads pruned
+    by an ``isin`` on the first key column, then an exact join on all of
+    them. Null key parts never match (SQL equality, like the distributed
+    semi-join). ``live=True`` drops ids a NEWER generation tombstoned —
+    :func:`live_docs` semantics."""
+    import pyarrow.dataset as ds_mod
+
+    keys = keys[list(key_cols)].dropna().drop_duplicates()
+    if keys.empty:
+        return np.empty(0, dtype=np.int64)
+    tombs = (
+        [
+            (int(s["seg_id"]), _tombstones_local(s["path"]))
+            for s in list_segments(index_dir)
+            if int(s["n_tombstones"])
+        ]
+        if live
+        else []
+    )
+    first = list(set(keys[key_cols[0]]))
+    parts = []
+    for gid, gdir in _gen_entries(index_dir):
+        t = (
+            ds_mod.dataset(IndexPaths(gdir).docs, partitioning="hive")
+            .to_table(
+                columns=["doc_id", *key_cols],
+                filter=ds_mod.field(key_cols[0]).isin(first),
+            )
+            .to_pandas()
+        )
+        ids = t.merge(keys, on=list(key_cols))["doc_id"].to_numpy(np.int64)
+        newer = [d for sid, d in tombs if sid > gid]
+        if newer and ids.size:
+            ids = ids[~np.isin(ids, np.concatenate(newer))]
+        parts.append(ids)
+    return np.unique(np.concatenate(parts))
+
+
 def _add_segment_local(
     spark: SparkSession,
-    corpus: DataFrame,
+    table,
     index_dir: str,
     seg_dir: str,
     seg_id: int,
@@ -348,10 +463,11 @@ def _add_segment_local(
     extra_fields: dict[str, str] | None,
     base_meta: dict,
 ) -> Index:
-    """The Spark-free micro-batch form of add_segment: ONE collect job
-    (tokenize + Catalyst row derivations), then index/localbuild.py writes a
-    layout-identical generation and the tombstone set comes from pyarrow
-    key-pruned reads of the older generations' docs tables."""
+    """The Spark-free micro-batch form of add_segment over an in-memory
+    ``pyarrow.Table``: :func:`_derive_batch` (zero Spark jobs), then
+    index/localbuild.py writes a layout-identical generation and the
+    tombstone set comes from :func:`_key_doc_ids` (pyarrow key-pruned reads
+    of the older generations' docs tables)."""
     import shutil as _sh
 
     import pyarrow as pa
@@ -359,7 +475,6 @@ def _add_segment_local(
     import pyarrow.parquet as pq
 
     from gazetteer_search_spark.index.localbuild import build_segment_index_local
-    from gazetteer_search_spark.search import bm25
 
     # a crashed earlier attempt (no manifest row -> invisible to readers)
     # may have left partial files under this seg_id; the local writer
@@ -370,21 +485,12 @@ def _add_segment_local(
 
     name_key = base_meta.get("name_key_sql") or b.DEFAULT_NAME_KEY_SQL
     extra_fields = extra_fields or {}
-    sel = [
-        "doc_id", "repo", "path", "commit", "lang",
-        F.sha2("content", 256).alias("content_sha256"),
-        # a store_content base keeps stored content across generations —
-        # serving snippets must hydrate segment-resident winners too
-        *(["content"] if base_meta.get("stored_content") else []),
-        bm25.tokens_col(F.col("content"), tokenizer).alias("tokens"),
-        F.expr(name_key).cast("string").alias("_nk"),
-    ]
-    for fname, colname in sorted(extra_fields.items()):
-        sel.append(
-            bm25.tokens_col(F.col(colname), tokenizer).alias(f"_ftok_{fname}")
-        )
-    pdf = corpus.select(*sel).toPandas()  # THE one Spark job
-    pdf["tokens"] = [list(t) for t in pdf["tokens"]]
+    pdf = _derive_batch(
+        spark, table,
+        clustered=bool(base_meta.get("clustered_by")),
+        name_key=name_key, tokenizer=tokenizer, field_map=extra_fields,
+        stored_content=bool(base_meta.get("stored_content")),
+    )
 
     # frozen scoring universe, all via pyarrow (no Spark)
     paths0 = IndexPaths(index_dir)
@@ -426,27 +532,10 @@ def _add_segment_local(
         postings_codec=base_meta.get("postings_codec", "vbyte"),
     )
 
-    # tombstones: key-pruned pyarrow reads of older generations' docs
+    # tombstones: every older doc sharing an upsert key with the batch
     import pandas as pd
 
-    batch_keys = pdf[list(key_cols)].drop_duplicates()
-    first_key_vals = set(batch_keys[key_cols[0]])
-    dead_parts = []
-    for gdir in _gen_dirs(index_dir):
-        dset = ds_mod.dataset(IndexPaths(gdir).docs, partitioning="hive")
-        t = dset.to_table(
-            columns=["doc_id", *key_cols],
-            filter=ds_mod.field(key_cols[0]).isin(list(first_key_vals)),
-        ).to_pandas()
-        if len(t):
-            hit = t.merge(batch_keys, on=list(key_cols), how="inner")
-            if len(hit):
-                dead_parts.append(hit["doc_id"].to_numpy(dtype=np.int64))
-    dead = (
-        np.unique(np.concatenate(dead_parts))
-        if dead_parts
-        else np.empty(0, dtype=np.int64)
-    )
+    dead = _key_doc_ids(index_dir, pdf, key_cols)
     tomb_dir = os.path.join(seg_dir, "tombstones")
     os.makedirs(tomb_dir, exist_ok=True)
     pq.write_table(
@@ -915,18 +1004,26 @@ def fetch_docs(
     return out
 
 
-def open_multi_search(index_dir: str, spark: SparkSession | None = None):
+def open_multi_search(
+    index_dir: str,
+    spark: SparkSession | None = None,
+    base: Index | None = None,
+):
     """SearchEngine over base + segments (serving path). Spark-free when
     ``spark`` is None — the full analyzer/ladder/trim lifecycle runs, every
-    rung answered by the MultiExecutor."""
+    rung answered by the MultiExecutor. ``base``: an already-open handle on
+    the base generation, reused as is — segments never rewrite base files,
+    so a live reopen after an ingest rebuilds only the MultiExecutor (no
+    load_index Spark jobs)."""
     from gazetteer_search_spark.search.engine import SearchEngine
 
     ex = MultiExecutor(index_dir)
-    idx = (
-        load_index(spark, index_dir)
-        if spark is not None
-        else load_index_local(index_dir)
-    )
+    if base is not None:
+        idx = base
+    elif spark is not None:
+        idx = load_index(spark, index_dir)
+    else:
+        idx = load_index_local(index_dir)
     eng = SearchEngine(spark, idx, serving=True)
     eng._local = ex
     return eng
@@ -1058,7 +1155,7 @@ def delete_by_query(
 
 
 def delete_by_keys(
-    spark: SparkSession,
+    spark: SparkSession | None,
     index_dir: str,
     keys,
     key_cols: tuple[str, ...] = ("repo", "path"),
@@ -1066,16 +1163,28 @@ def delete_by_keys(
     """ES ``_bulk`` delete-action analog: tombstone every LIVE doc whose
     key tuple appears in ``keys`` — the same (repo, path) upsert identity
     ``add_segment`` supersedes on, so a bulk body mixing index and delete
-    actions stays key-consistent. Resolution is one broadcast left-semi
-    join against the live view (the key list is request-bounded NDJSON;
-    the corpus side never leaves the executors), then the tombstone-only
-    segment from :func:`delete_by_query`. Unknown keys match nothing; a
-    zero-match call creates no segment and reports deleted=0, like ES."""
+    actions stays key-consistent. On bases within add_segment's gate
+    (:data:`LOCAL_MAX_BASE_DOCS`) resolution is Spark-free: the key-pruned
+    pyarrow docs scan of :func:`_key_doc_ids` with newer generations'
+    tombstones masked, written through :func:`delete_by_query`'s
+    ``doc_ids`` path (``spark`` may be None). Above it, one broadcast
+    left-semi join against the live view (the key list is request-bounded
+    NDJSON; the corpus side never leaves the executors) feeds the same
+    tombstone-only segment. Unknown keys match nothing; a zero-match call
+    creates no segment and reports deleted=0, like ES."""
     uniq = list(dict.fromkeys(tuple(k) for k in keys))
     if not uniq:
         return {"seg_id": None, "n_tombstones": 0}
     if any(len(k) != len(key_cols) for k in uniq):
         raise ValueError(f"each key needs exactly {len(key_cols)} values")
+    if _base_fits_local(index_dir):
+        import pandas as pd
+
+        ids = _key_doc_ids(
+            index_dir, pd.DataFrame(uniq, columns=list(key_cols)), key_cols,
+            live=True,
+        )
+        return delete_by_query(None, index_dir, doc_ids=ids)
     kdf = spark.createDataFrame(
         uniq, schema=", ".join(f"`{c}` string" for c in key_cols)
     )

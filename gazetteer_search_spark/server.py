@@ -2384,9 +2384,15 @@ def _make_handler(
             (delete_by_keys), and the serving engine reopens over all
             generations — subsequent searches see the changes, ES refresh
             semantics. The whole body validates BEFORE any mutation (a 400
-            leaves the index untouched). Needs a Spark-backed server (the
-            micro-batch build's tokenize pass is one Spark job); Spark-free
-            nodes answer 501 and defer to the add-segment CLI."""
+            leaves the index untouched); a failure after the first manifest
+            row landed still reopens the engine (the committed part is
+            served) and answers 500. The mutation schedules no Spark job:
+            the batch is an in-memory Arrow table whose row derivations
+            (doc_id hash, content_sha256, name key) Catalyst evaluates on
+            the driver, deletes resolve through pyarrow, and the reopen
+            reuses the loaded base handle. Those derivations still need a
+            SparkSession, so Spark-free nodes answer 501 and defer to the
+            add-segment CLI."""
             nonlocal engine, mtime, last_modified
             spark = getattr(engine, "spark", None)
             if index_path is None or spark is None:
@@ -2480,11 +2486,24 @@ def _make_handler(
                 del_keys = [
                     k for k, (op, _) in last.items() if op == "delete"
                 ]
-                from gazetteer_search_spark.index import segments as _segs
+                import pyarrow as pa
 
-                seg_docs = 0
-                deleted = 0
-                with lock:
+                cols = ("repo", "path", "commit", "lang", "content")
+                batch = pa.Table.from_pylist(
+                    [{c: d[c] for c in cols} for d in docs],
+                    schema=pa.schema([(c, pa.string()) for c in cols]),
+                )
+            except Exception as e:
+                self._send(400, {"error": str(e)})
+                return
+            from gazetteer_search_spark.index import segments as _segs
+
+            seg_docs = 0
+            deleted = 0
+            failure = None
+            with lock:
+                n_segs0 = len(_segs.list_segments(index_path))
+                try:
                     if del_keys:
                         deleted = int(
                             _segs.delete_by_keys(
@@ -2492,40 +2511,46 @@ def _make_handler(
                             )["n_tombstones"]
                         )
                     if docs:
-                        rows = [
-                            (d["repo"], d["path"], d["commit"], d["lang"],
-                             d["content"])
-                            for d in docs
-                        ]
-                        batch = spark.createDataFrame(
-                            rows, "repo string, path string, commit string, "
-                            "lang string, content string",
+                        seg_docs = int(
+                            _segs.add_segment(spark, batch, index_path).n_docs
                         )
-                        seg_idx = _segs.add_segment(spark, batch, index_path)
-                        seg_docs = int(seg_idx.n_docs)
-                    import time as _time
+                except Exception as e:
+                    failure = e
+                n_segs = len(_segs.list_segments(index_path))
+                if n_segs != n_segs0:
+                    # any landed manifest row is live on disk: serve it,
+                    # even when a later step of this body failed
+                    try:
+                        engine = _segs.open_multi_search(
+                            index_path, spark, base=engine.index
+                        )
+                    except Exception as e:
+                        failure = failure or e
+                    else:
+                        import time as _time
 
-                    engine = _segs.open_multi_search(index_path, spark)
-                    # refresh the conditional-GET watermark: a client whose
-                    # If-Modified-Since predates this ingest must get a
-                    # fresh 200, not a stale 304 of the pre-bulk corpus
-                    mtime = _time.time()
-                    last_modified = formatdate(mtime, usegmt=True)
-                    # the new stamp invalidates by comparison, but a bulk
-                    # landing within the SAME second would leave entries
-                    # stamp-equal — drop them outright
-                    req_cache.clear()
-                self._send(
-                    200,
-                    {
-                        "indexed": len(docs),
-                        "deleted": deleted,
-                        "seg_docs": seg_docs,
-                        "generations": len(_segs.list_segments(index_path)) + 1,
-                    },
-                )
-            except Exception as e:
-                self._send(400, {"error": str(e)})
+                        # refresh the conditional-GET watermark: a client
+                        # whose If-Modified-Since predates this ingest must
+                        # get a fresh 200, not a stale 304 of the pre-bulk
+                        # corpus
+                        mtime = _time.time()
+                        last_modified = formatdate(mtime, usegmt=True)
+                        # the new stamp invalidates by comparison, but a
+                        # bulk landing within the SAME second would leave
+                        # entries stamp-equal — drop them outright
+                        req_cache.clear()
+            if failure is not None:
+                self._send(500, {"error": str(failure)})
+                return
+            self._send(
+                200,
+                {
+                    "indexed": len(docs),
+                    "deleted": deleted,
+                    "seg_docs": seg_docs,
+                    "generations": n_segs + 1,
+                },
+            )
 
         def log_request(self, code="-", size="-") -> None:
             """Access log (HttpLogger.java:38-74 analog): one line per

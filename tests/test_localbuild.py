@@ -6,6 +6,7 @@ dominated micro-batch ingest)."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -19,6 +20,8 @@ from gazetteer_search_spark.sources import synthetic_corpus
 
 @pytest.fixture(scope="module")
 def base(spark, tmp_path_factory):
+    """Clustered (segment ids take the bit-61 rule), custom name key, one
+    mapped field (segments carry ``_ftok_name`` field tokens)."""
     root = str(tmp_path_factory.mktemp("lb_base") / "idx")
     corpus0 = synthetic_corpus(spark, 300)
     builder.build_index(
@@ -26,7 +29,8 @@ def base(spark, tmp_path_factory):
             "doc_id", F.abs(F.xxhash64("repo", "path")).cast("long")
         ),
         root, n_buckets=4, postings_per_group=1 << 16,
-        extra_fields={"name": "path"},
+        extra_fields={"name": "path"}, cluster_by=("repo", "path"),
+        name_key="repo",
     )
     return root, corpus0
 
@@ -40,14 +44,21 @@ def _batch(corpus0, lo, hi, tag, extra="localmarker"):
     )
 
 
-def _twin_roots(spark, base, tmp_path_factory, batch):
+def _twin_roots(spark, base, tmp_path_factory, batch, **kw):
+    """One copy of the base per segment route: the local micro-batch build
+    fed the DataFrame, the same rows as an in-memory Arrow table (the
+    ``POST /bulk`` form), and the distributed build."""
     root0, _ = base
     roots = {}
-    for mode, thr in [("local", 5000), ("spark", 0)]:
+    for mode, src, thr in [
+        ("local", batch, 5000),
+        ("table", batch.toArrow(), 5000),
+        ("spark", batch, 0),
+    ]:
         root = str(tmp_path_factory.mktemp(f"lb_{mode}") / "idx")
         shutil.copytree(root0, root)
         segments.add_segment(
-            spark, batch, root, n_buckets=4, local_threshold=thr
+            spark, src, root, n_buckets=4, local_threshold=thr, **kw
         )
         roots[mode] = root
     return roots
@@ -59,45 +70,95 @@ def twins(spark, base, tmp_path_factory):
     return _twin_roots(spark, base, tmp_path_factory, batch)
 
 
+@pytest.fixture(scope="module")
+def native_twins(spark, base, tmp_path_factory):
+    batch = _batch(base[1], 60, 100, "vnat", "nativemarker")
+    return _twin_roots(
+        spark, base, tmp_path_factory, batch, tokenizer="native"
+    )
+
+
 def _seg(root):
     return segments.list_segments(root)[0]["path"]
 
 
+def _seg_files(root) -> dict:
+    """Every file of the segment, keyed by directory (part-file names are
+    random, contents are not), minus the build manifest, which records
+    wall-clock times."""
+    seg = _seg(root)
+    out = {}
+    for d, _, files in os.walk(seg):
+        rel = os.path.relpath(d, seg)
+        if rel.split(os.sep)[0] != "manifest":
+            out[rel] = sorted(
+                open(os.path.join(d, f), "rb").read() for f in files
+            )
+    return out
+
+
 def test_local_marker_and_routing(twins):
-    ml = builder.read_index_meta(_seg(twins["local"]))
-    ms = builder.read_index_meta(_seg(twins["spark"]))
-    assert ml.get("built_by") == "localbuild"
-    assert "built_by" not in ms
+    for mode, root in twins.items():
+        meta = builder.read_index_meta(_seg(root))
+        assert meta.get("built_by") == (
+            None if mode == "spark" else "localbuild"
+        )
+        assert meta["name_key_sql"] == "repo"  # the base's custom key
 
 
-def test_docs_rows_identical(spark, twins):
+@pytest.mark.parametrize("fixture", ["twins", "native_twins"])
+def test_in_memory_batch_segment_byte_identical(request, fixture):
+    """An Arrow-table batch derives exactly what the collected DataFrame
+    batch does: the segments match file for file, byte for byte."""
+    roots = request.getfixturevalue(fixture)
+    files = _seg_files(roots["table"])
+    assert files == _seg_files(roots["local"])
+    assert {"docs/doc_part=0", "postings/term_bucket=0", "tombstones"} <= set(
+        files
+    )
+
+
+def _docs_rows(spark, root):
     cols = [
         "doc_id", "repo", "path", "commit", "lang", "content_sha256",
         "doc_len", "ref_count", "name_ordinal", "doc_part",
     ]
-    rows = {}
-    for mode, root in twins.items():
-        df = spark.read.parquet(builder.IndexPaths(_seg(root)).docs)
-        assert sorted(df.columns) == sorted(cols)
-        rows[mode] = sorted(tuple(r[c] for c in cols) for r in df.collect())
-    assert rows["local"] == rows["spark"]
+    df = spark.read.parquet(builder.IndexPaths(_seg(root)).docs)
+    assert sorted(df.columns) == sorted(cols)
+    return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+def _postings(spark, root):
+    dec = decode_postings(
+        spark.read.parquet(builder.IndexPaths(_seg(root)).postings),
+        with_tf=True,
+        ids_codec=builder.read_index_meta(_seg(root)).get(
+            "postings_codec", "vbyte"
+        ),
+    ).collect()
+    return sorted((r.term, r.doc_id, r.tf, round(r.score, 12)) for r in dec)
+
+
+def test_docs_rows_identical(spark, twins):
+    rows = {mode: _docs_rows(spark, root) for mode, root in twins.items()}
+    assert rows["local"] == rows["table"] == rows["spark"]
+    # clustered base: every segment id carries bit 61
+    assert all(r[0] >> 61 == 1 for r in rows["local"])
 
 
 def test_postings_decode_identical(spark, twins):
-    got = {}
-    for mode, root in twins.items():
-        dec = decode_postings(
-            spark.read.parquet(builder.IndexPaths(_seg(root)).postings),
-            with_tf=True,
-            ids_codec=builder.read_index_meta(_seg(root)).get(
-                "postings_codec", "vbyte"
-            ),
-        ).collect()
-        got[mode] = sorted(
-            (r.term, r.doc_id, r.tf, round(r.score, 12)) for r in dec
-        )
-    assert got["local"] == got["spark"]
+    got = {mode: _postings(spark, root) for mode, root in twins.items()}
+    assert got["local"] == got["table"] == got["spark"]
     assert any(t.startswith("name:") for t, *_ in got["local"])  # field postings
+
+
+def test_native_tokenizer_twins_identical(spark, native_twins):
+    """tokenizer="native" folds into the same driver-evaluated projection;
+    all three routes still write the same docs and postings."""
+    for read in (_docs_rows, _postings):
+        got = {mode: read(spark, root) for mode, root in native_twins.items()}
+        assert got["local"] == got["table"] == got["spark"]
+    assert any(t == "nativemarker" for t, *_ in got["local"])
 
 
 def test_attr_blocks_identical(spark, twins):
@@ -112,7 +173,7 @@ def test_attr_blocks_identical(spark, twins):
             (r.term, r.block_id, r.attr_bits, r.attr_ids, r.doc_count)
             for r in rows
         )
-    assert got["local"] == got["spark"]
+    assert got["local"] == got["table"] == got["spark"]
 
 
 def test_term_stats_and_corpus_stats_identical(spark, twins):
@@ -124,7 +185,7 @@ def test_term_stats_and_corpus_stats_identical(spark, twins):
                 sorted(df.columns),
                 sorted(tuple(r) for r in df.collect()),
             )
-        assert got["local"] == got["spark"], sub
+        assert got["local"] == got["table"] == got["spark"], sub
 
 
 def test_tombstones_and_manifest_identical(twins):
@@ -139,8 +200,8 @@ def test_tombstones_and_manifest_identical(twins):
         )
         seg = segments.list_segments(root)[0]
         t[mode + "_m"] = (seg["n_docs"], seg["n_tombstones"])
-    assert t["local"] == t["spark"] and len(t["local"]) == 60
-    assert t["local_m"] == t["spark_m"]
+    assert t["local"] == t["table"] == t["spark"] and len(t["local"]) == 60
+    assert t["local_m"] == t["table_m"] == t["spark_m"]
 
 
 def test_queries_rank_identical(twins):
@@ -155,7 +216,7 @@ def test_queries_rank_identical(twins):
             ]
             for q in ["localmarker", "mergePostings stream", "postings"]
         }
-    assert res["local"] == res["spark"]
+    assert res["local"] == res["table"] == res["spark"]
     assert len(res["local"]["localmarker"]) == 50
 
 

@@ -667,6 +667,65 @@ def test_delete_by_keys_upsert_identity(spark, base, tmp_path_factory):
         segments.delete_by_keys(spark, root, [("only-repo",)])
 
 
+def test_delete_by_keys_resolution_matches_live_semijoin(
+    spark, base, tmp_path_factory, monkeypatch
+):
+    """delete_by_keys' Spark-free resolution (pyarrow key-pruned docs scan,
+    newer tombstones masked) equals the live_docs + left-semi-join answer
+    on a multi-generation index, and so does the above-gate Spark branch
+    (forced at small scale): an already-superseded key resolves to its
+    live segment version only, an already-deleted and an unknown key to
+    nothing (deleted=0, no segment)."""
+    root0, corpus0, _ = base
+    import shutil
+
+    root = str(tmp_path_factory.mktemp("seg_dbk_res"))
+    shutil.rmtree(root)
+    shutil.copytree(root0, root)
+    sup, gone, plain = [
+        (r.repo, r.path)
+        for r in segments.live_docs(spark, root)
+        .orderBy("doc_id").limit(3).collect()
+    ]
+    # generation 1 supersedes `sup`; generation 2 deletes `gone`
+    segments.add_segment(
+        spark,
+        corpus0.filter((F.col("repo") == sup[0]) & (F.col("path") == sup[1]))
+        .drop("doc_id").withColumn("commit", F.lit("v2")),
+        root, n_buckets=4,
+    )
+    assert segments.delete_by_keys(spark, root, [gone])["n_tombstones"] == 1
+
+    unknown = ("org/nowhere", "src/none.py")
+    keys = [sup, gone, plain, unknown]
+    want = sorted(
+        r.doc_id
+        for r in segments.live_docs(spark, root)
+        .join(spark.createDataFrame(keys, "repo string, path string"),
+              ["repo", "path"], "left_semi")
+        .select("doc_id").collect()
+    )
+    assert len(want) == 2  # sup's segment version + plain
+
+    got = {}
+    for branch in ("pyarrow", "spark"):
+        if branch == "spark":
+            monkeypatch.setattr(segments, "LOCAL_MAX_BASE_DOCS", 0)
+        r = str(tmp_path_factory.mktemp(f"seg_dbk_{branch}"))
+        shutil.rmtree(r)
+        shutil.copytree(root, r)
+        res = segments.delete_by_keys(spark, r, keys)
+        seg = segments.list_segments(r)[-1]
+        assert res == {"seg_id": seg["seg_id"], "n_tombstones": 2}
+        got[branch] = sorted(segments._tombstones_local(seg["path"]).tolist())
+        n_gens = len(segments.list_segments(r))
+        assert segments.delete_by_keys(spark, r, [gone, unknown]) == {
+            "seg_id": None, "n_tombstones": 0,
+        }
+        assert len(segments.list_segments(r)) == n_gens
+    assert got["pyarrow"] == got["spark"] == want
+
+
 def test_update_by_query_with_source(spark, base, tmp_path_factory):
     """ES _update_by_query analog (source-corpus form): matched live docs
     re-index as a new generation with the SQL 'script' applied; their old

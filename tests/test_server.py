@@ -1011,6 +1011,120 @@ def test_http_bulk_action_lines(spark, tmp_path_factory):
         srv.shutdown()
 
 
+def _serve_bulk_index(spark, tmp_path_factory, name):
+    """20 one-file docs under org/r, served Spark-backed with /bulk on.
+    Returns (server, base url, index dir, base Index)."""
+    corpus = spark.range(0, 20).select(
+        F.col("id").alias("doc_id"),
+        F.lit("org/r").alias("repo"),
+        F.format_string("src/%d.py", "id").alias("path"),
+        F.lit("c").alias("commit"),
+        F.lit("python").alias("lang"),
+        F.lit("bulkjob shared plain words").alias("content"),
+    )
+    out = str(tmp_path_factory.mktemp(name))
+    idx = builder.build_index(spark, corpus, out, n_buckets=4)
+    srv = make_server(SearchEngine(spark, idx, serving=True),
+                      SearchOptions(k=20, prefix=False), port=0,
+                      index_path=out)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    return srv, f"http://127.0.0.1:{srv.server_address[1]}", out, idx
+
+
+def _post_bulk(base, lines):
+    body = "\n".join(json.dumps(ln) for ln in lines).encode()
+    req = urllib.request.Request(f"{base}/bulk", data=body, method="POST")
+    try:
+        with urllib.request.urlopen(req) as r:
+            return 200, json.loads(r.read())
+    except urllib.error.HTTPError as e:
+        return e.code, json.loads(e.read())
+
+
+def test_http_bulk_schedules_no_spark_job(spark, tmp_path_factory):
+    """POST /bulk's mutation (delete resolution, batch derivation, segment
+    build, tombstones, reopen) schedules no Spark job: pinned on the route
+    (handler threads run outside any job group) and on the same library
+    sequence under an explicit job group."""
+    import pyarrow as pa
+
+    from gazetteer_search_spark.index import segments
+
+    srv, base, out, idx = _serve_bulk_index(
+        spark, tmp_path_factory, "idx_srv_bulk_jobs"
+    )
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    try:
+        before = set(st.getJobIdsForGroup(None))
+        code, env = _post_bulk(base, [
+            {"index": {}},
+            {"repo": "org/new", "path": "src/a.py", "commit": "d",
+             "lang": "python", "content": "zerojobmarker alpha"},
+            {"delete": {"repo": "org/r", "path": "src/3.py"}},
+        ])
+        new_jobs = set(st.getJobIdsForGroup(None)) - before
+        assert code == 200 and (env["indexed"], env["deleted"]) == (1, 1)
+        assert new_jobs == set()
+        with urllib.request.urlopen(
+            f"{base}/search?q=zerojobmarker&size=10&prefix=false"
+        ) as r:
+            assert len(json.loads(r.read())["hits"]) == 1
+    finally:
+        srv.shutdown()
+
+    sc.setJobGroup("bulk-zero-jobs", "bulk mutation sequence")
+    try:
+        segments.delete_by_keys(spark, out, [("org/r", "src/4.py")])
+        segments.add_segment(spark, pa.table({
+            "repo": ["org/new"], "path": ["src/b.py"], "commit": ["d"],
+            "lang": ["python"], "content": ["zerojobmarker beta"],
+        }), out)
+        eng = segments.open_multi_search(out, spark, base=idx)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert st.getJobIdsForGroup("bulk-zero-jobs") == []
+    opts = SearchOptions(k=20, prefix=False)
+    assert len(eng.search_hits("zerojobmarker", opts)) == 2
+    assert len(eng.search_hits("bulkjob", opts)) == 18
+
+
+def test_http_bulk_partial_failure_still_served(
+    spark, tmp_path_factory, monkeypatch
+):
+    """A body whose delete commits but whose segment build then fails
+    answers 500 (a server-side failure, not a malformed body), and the
+    committed tombstones are served at once: the engine reopens and the
+    request cache drops its pre-delete page."""
+    from gazetteer_search_spark.index import segments
+
+    srv, base, _, _ = _serve_bulk_index(
+        spark, tmp_path_factory, "idx_srv_bulk_fail"
+    )
+    url = f"{base}/search?q=bulkjob&size=20&prefix=false"
+    try:
+        with urllib.request.urlopen(url) as r:  # cached pre-delete page
+            assert len(json.loads(r.read())["hits"]) == 20
+
+        def _fail(*a, **kw):
+            raise RuntimeError("segment build failed")
+
+        monkeypatch.setattr(segments, "add_segment", _fail)
+        code, err = _post_bulk(base, [
+            {"delete": {"repo": "org/r", "path": "src/3.py"}},
+            {"repo": "org/new", "path": "src/a.py", "commit": "d",
+             "lang": "python", "content": "bulkjob alpha"},
+        ])
+        assert code == 500 and "segment build failed" in err["error"]
+        with urllib.request.urlopen(url) as r:
+            assert r.headers["X-Cache"] == "MISS"
+            paths = [h["path"] for h in json.loads(r.read())["hits"]]
+        assert len(paths) == 19 and "src/3.py" not in paths
+    finally:
+        srv.shutdown()
+
+
 def test_http_spell_did_you_mean(eng):
     """GET /spell (ES term-suggester analog): OOV tokens get OSA<=1
     dictionary suggestions ranked by df, in-vocabulary tokens stay
