@@ -328,7 +328,7 @@ def cmd_query(args: argparse.Namespace) -> None:
 def cmd_suggest(args: argparse.Namespace) -> None:
     """Term-dictionary autocomplete at the CLI: ranked completions of a
     prefix with doc frequencies (HTTP twin: GET /suggest). Spark-free —
-    answers from the serving tier's cached dictionary."""
+    answers from the term dictionary."""
     from gazetteer_search_spark.index.segments import open_multi_search
 
     eng = open_multi_search(args.index)  # multi-generation-aware, Spark-free

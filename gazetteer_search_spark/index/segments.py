@@ -585,8 +585,9 @@ class MultiExecutor:
     generations' tombstones at decode, merged by plain hit interleaving —
     every live doc exists in exactly one generation, so per-generation
     top-k lists merge exactly (the doc-range-sharding argument). Implements
-    the LocalExecutor surface the engine routes through (search_rung +
-    expansions).
+    the LocalExecutor surface the engine routes through (search_rung and
+    the other scored operations); dictionary operations are the engine's
+    TermDict, which loads every generation listed in ``subs``.
 
     Scoping note: ``SearchOptions.distinct`` collapses duplicate names
     WITHIN each generation (name_ordinal is computed per import batch) —
@@ -687,26 +688,6 @@ class MultiExecutor:
                   else -r[col_idx], r[0])
         )
         return merged[: int(getattr(options, "k", 10))]
-
-    def expand_prefix(self, prefix: str) -> list[str]:
-        from gazetteer_search_spark.search.fastpath import MAX_PREFIX_EXPANSIONS
-
-        out: dict[str, None] = {}
-        for s in self.subs:
-            for t in s.expand_prefix(prefix):
-                out.setdefault(t, None)
-        return list(out)[:MAX_PREFIX_EXPANSIONS]
-
-    def suggest(self, prefix: str, k: int = 10) -> list[tuple[str, int]]:
-        """Autocomplete across generations: per-generation df summed per
-        term (Lucene df-with-deletes semantics — tombstoned docs keep
-        counting toward df until a merge rewrites the stats; compaction
-        makes the counts exact)."""
-        agg: dict[str, int] = {}
-        for s in self.subs:
-            for t, df in s.suggest(prefix, k=None):
-                agg[t] = agg.get(t, 0) + int(df)
-        return sorted(agg.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
 
     def facet_rows(
         self, groups, msm: int, options, keys=("lang",), size: int = 10,
@@ -826,37 +807,6 @@ class MultiExecutor:
     def explain_rung(self, groups, msm: int, options) -> list[tuple]:
         hits = self.search_rung(groups, msm, options)
         return self.explain_hits([h.doc_id for h in hits], groups)
-
-    def df_for_terms(self, terms: list[str]) -> dict[str, int]:
-        """Per-generation df summed per term (same df-with-deletes semantics
-        as suggest) — more-like-this term selection over a multi-generation
-        index."""
-        agg: dict[str, int] = {}
-        for s in self.subs:
-            for t, df in s.df_for_terms(terms).items():
-                agg[t] = agg.get(t, 0) + int(df)
-        return agg
-
-    def expand_fuzzy(self, term: str, max_edits: int = 1) -> list[str]:
-        from gazetteer_search_spark.search.fastpath import MAX_FUZZY_EXPANSIONS
-
-        out: dict[str, None] = {}
-        for s in self.subs:
-            for t in s.expand_fuzzy(term, max_edits):
-                out.setdefault(t, None)
-        return list(out)[:MAX_FUZZY_EXPANSIONS]
-
-    def expand_regexp(self, anchored: str, lit_prefix: str = "") -> list[str]:
-        """Wildcard/regexp dictionary expansion across generations — the
-        engine delegates every pattern query here on a multi-generation
-        serving engine (same dedup-and-cap shape as expand_prefix)."""
-        from gazetteer_search_spark.search.fastpath import MAX_REGEX_EXPANSIONS
-
-        out: dict[str, None] = {}
-        for s in self.subs:
-            for t in s.expand_regexp(anchored, lit_prefix):
-                out.setdefault(t, None)
-        return list(out)[:MAX_REGEX_EXPANSIONS]
 
 
 def open_docs_pruned(ds_mod, docs_root: str, ids: list[int], npart):

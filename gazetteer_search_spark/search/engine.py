@@ -12,7 +12,9 @@ mapping (SURVEY §2.2):
 - dis_max (P8)               per-(doc, group) max over the group's term
                              variants (synonyms, fuzzy & prefix expansions)
 - prefix (P3)                term-dictionary range scan -> expansion group
-- fuzzy<=1 (P15)             levenshtein join against the term dictionary
+- fuzzy<=1 (P15)             edit-distance scan of the term dictionary
+                             (search/termdict.py, one driver-side dictionary
+                             for every engine form)
 - constant_score/function_score (P9/P10)  native column arithmetic
 - coalesce ladder (U1)       driver loop, early exit on first non-empty rung
 - top-k (T1)                 orderBy(score desc, doc_id asc).limit(k); ranks
@@ -30,8 +32,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -39,10 +39,8 @@ from pyspark.sql import types as T
 from gazetteer_search_spark.analyzer.query_ir import Query, analyze_query
 from gazetteer_search_spark.index.builder import Index, decode_postings, term_bucket_py
 from gazetteer_search_spark.search import bm25
+from gazetteer_search_spark.search.termdict import TermDict
 
-MAX_PREFIX_EXPANSIONS = 128
-MAX_FUZZY_EXPANSIONS = 32
-MAX_REGEX_EXPANSIONS = 128  # Lucene top_terms_N rewrite cap (wildcard/regexp)
 # matched_mask is a 63-bit clause bitmask (bit 63 is the int64 sign bit: the
 # Spark shiftleft would silently wrap and numpy's 1<<63 overflows) — group ids
 # above this are invalid, and query analysis caps its clause count to fit
@@ -203,19 +201,6 @@ def resolve_fuzziness(fuzziness: int | str, term: str) -> int:
     raise ValueError(
         f"fuzziness must be 0, 1, 2 or 'auto'; got {fuzziness!r}"
     )
-
-
-def transpositions(term: str) -> set[str]:
-    """All distinct strings one ADJACENT TRANSPOSITION away from ``term``
-    (excluding term itself). OSA distance <= 1 == Levenshtein <= 1 OR
-    membership here — the decomposition all three fuzzy implementations
-    (Spark dictionary join, serving fastpath, DuckDB oracle via its native
-    damerau_levenshtein) agree on."""
-    return {
-        term[:i] + term[i + 1] + term[i] + term[i + 2 :]
-        for i in range(len(term) - 1)
-        if term[i] != term[i + 1]
-    }
 
 
 GROUPS_SCHEMA = T.StructType(
@@ -618,152 +603,54 @@ class SearchEngine:
             index.postings = index.postings.persist()
             index.docs = index.docs.persist()
             index.term_stats = index.term_stats.persist()
-        # small at test scale; at cluster scale the term dictionary stays a
-        # distributed table and these expansions are pruned range scans.
-        # Field-qualified terms ("name:foo") are excluded: prefix/fuzzy
-        # expansion operates on the content-token dictionary, never across
-        # the field namespace. term_stats is None for a Spark-free serving
-        # engine (load_index_local) — every query then routes via _local.
-        self._term_stats = (
-            index.term_stats.filter(~F.col("term").contains(":"))
-            if index.term_stats is not None
-            else None
-        )
+        # the term dictionary (search/termdict.py), built on the first
+        # dictionary call: every engine form answers prefix / fuzzy /
+        # regexp expansion, suggest and df lookups from it on the driver
+        self._termdict: TermDict | None = None
+
+    @property
+    def termdict(self) -> TermDict:
+        """The dictionary over every generation this engine answers from (a
+        multi-generation executor lists them in ``subs``), df summed per
+        term."""
+        if self._termdict is None:
+            gens = [s.index for s in getattr(self._local, "subs", [])] or [
+                self.index
+            ]
+            self._termdict = TermDict([g.paths.term_stats for g in gens])
+        return self._termdict
 
     # ---- expansions ---------------------------------------------------------
     def expand_prefix(self, prefix: str) -> list[str]:
-        """Term-dictionary range scan (P3): sorted dict makes startswith a
-        range predicate; cap expansions by df like Lucene's rewrite cap.
-        A bare prefix expands in the content namespace only (never into
-        ``field:term`` dictionary entries — serving-tier parity); a prefix
-        containing ``:`` explicitly targets that field's namespace."""
-        if self._local is not None:
-            return self._local.expand_prefix(prefix)
-        # bare prefix: the pre-filtered content-namespace dictionary;
-        # 'field:' prefix: the full dictionary (field terms are excluded
-        # from _term_stats at load)
-        base = (
-            self._term_stats if ":" not in prefix else self.index.term_stats
-        )
-        d = base.filter(F.col("term").startswith(prefix))
-        rows = (
-            d.orderBy(F.col("df").desc(), F.col("term"))
-            .limit(MAX_PREFIX_EXPANSIONS)
-            .select("term")
-            .collect()
-        )
-        return [r.term for r in rows]
+        """Term-dictionary range scan (P3), df-capped like Lucene's rewrite
+        cap. A bare prefix expands in the content namespace only (never into
+        ``field:term`` dictionary entries); a prefix containing ``:``
+        explicitly targets that field's namespace."""
+        return self.termdict.expand_prefix(prefix)
 
     def suggest(self, prefix: str, k: int = 10) -> list[tuple[str, int]]:
         """Autocomplete (ES completion-suggester analog, beyond reference):
         content-namespace dictionary terms starting with ``prefix``, ranked
-        (df desc, term asc) with their doc frequencies. Serving path answers
-        from the cached in-memory dictionary; the Spark path is a
-        TakeOrdered over the pruned term_stats scan. Multi-generation
+        (df desc, term asc) with their doc frequencies. Multi-generation
         engines sum per-generation df (Lucene df-with-deletes semantics —
         exact after compaction)."""
-        if not prefix:
-            raise ValueError("suggest: empty prefix")
-        if self._local is not None:
-            return self._local.suggest(prefix, k)
-        rows = (
-            self._term_stats.filter(F.col("term").startswith(prefix))
-            .orderBy(F.col("df").desc(), F.col("term"))
-            .limit(k)
-            .select("term", "df")
-            .collect()
-        )
-        return [(r.term, int(r.df)) for r in rows]
+        return self.termdict.suggest(prefix, k)
 
     def expand_fuzzy(self, term: str, max_edits: int = 1) -> list[str]:
         """Damerau edit-distance expansion against the term dictionary (P15;
         ES ``fuzziness`` — MainAddressQueryBuilder.java:291-293 sets 1).
-
-        ``max_edits=1`` (default): OSA<=1 decomposes exactly as
-        Levenshtein<=1 OR membership in the term's adjacent-transposition
-        set — the transposition half is a GENERATED IN-list equality
-        predicate (n-1 strings from the query term), not a per-row distance
-        UDF, so the whole expansion stays one pruned dictionary scan with
-        native predicates (a transposition counts ONE edit — plain
-        Levenshtein would cost "teh"->"the" two and miss the most common
-        typo class).
-
-        ``max_edits=2`` (the Lucene automaton ceiling): unrestricted
-        Damerau-Levenshtein <= 2 — the decomposition trick doesn't extend
-        (the transposition neighborhood of radius 2 is O(n^2) strings
-        composed with every 1-edit, no longer an IN-list), so the distance
-        runs as an Arrow-batched pandas UDF over the length-banded
-        dictionary slice: dictionary-shaped work computed WHERE THE
-        DICTIONARY LIVES (exactly as Lucene intersects its automaton with
-        the term dict per segment), only the df-ranked top survivors reach
-        the driver. Unrestricted DL (not OSA) is the variant DuckDB's
-        ``damerau_levenshtein`` implements, which keeps the oracle an exact
-        independent recompute."""
-        if max_edits <= 0:
-            return []
-        if self._local is not None:
-            return self._local.expand_fuzzy(term, max_edits)
-        n = len(term)
-        if max_edits == 1:
-            trans = transpositions(term)
-            cond = F.levenshtein(F.col("term"), F.lit(term)) <= 1
-            if trans:
-                cond = cond | F.col("term").isin(sorted(trans))
-            d = self._term_stats.filter(
-                F.length("term").between(n - 1, n + 1)
-            ).filter(cond)
-        else:
-            from gazetteer_search_spark.search.fastpath import (
-                damerau_levenshtein,
-            )
-
-            @F.pandas_udf("boolean")
-            def _within(col: pd.Series) -> pd.Series:
-                return col.map(
-                    lambda t: damerau_levenshtein(t, term, cap=2) <= 2
-                )
-
-            d = (
-                self._term_stats.filter(
-                    F.length("term").between(n - 2, n + 2)
-                )
-                .filter(~F.col("term").contains(":"))
-                .filter(_within(F.col("term")))
-            )
-        rows = (
-            d.orderBy(F.col("df").desc(), F.col("term"))
-            .limit(MAX_FUZZY_EXPANSIONS)
-            .select("term")
-            .collect()
-        )
-        return [r.term for r in rows]
+        ``max_edits=1`` is OSA<=1, ``max_edits=2`` (the Lucene automaton
+        ceiling) unrestricted Damerau-Levenshtein <= 2 — the variant
+        DuckDB's ``damerau_levenshtein`` implements, which keeps the oracle
+        an exact independent recompute. See TermDict.expand_fuzzy."""
+        return self.termdict.expand_fuzzy(term, max_edits)
 
     def expand_regexp(self, regex_body: str) -> list[str]:
         """Regexp term expansion (ES ``regexp`` query analog, beyond
         reference): full, case-insensitive match of the pattern against the
         content-token dictionary, df-ranked and capped like Lucene's
-        ``top_terms_N`` rewrite. One anchored pattern string
-        (patterns.anchored_ci) drives the Spark ``rlike``, the serving
-        executor's Python ``re`` and the DuckDB RE2 oracle identically; the
-        pattern's leading literal run additionally prunes the dictionary
-        scan to a range predicate (Lucene's commonPrefix extraction)."""
-        from gazetteer_search_spark.search import patterns as _pat
-
-        anchored = _pat.anchored_ci(regex_body)  # validates up front
-        if self._local is not None:
-            return self._local.expand_regexp(anchored, _pat.literal_prefix(regex_body))
-        d = self._term_stats
-        pre = _pat.literal_prefix(regex_body)
-        if pre:
-            d = d.filter(F.col("term").startswith(pre))
-        rows = (
-            d.filter(F.col("term").rlike(anchored))
-            .orderBy(F.col("df").desc(), F.col("term"))
-            .limit(MAX_REGEX_EXPANSIONS)
-            .select("term")
-            .collect()
-        )
-        return [r.term for r in rows]
+        ``top_terms_N`` rewrite. Invalid patterns raise ValueError."""
+        return self.termdict.expand_regexp(regex_body)
 
     def expand_wildcard(self, glob: str) -> list[str]:
         """Wildcard (glob) term expansion (ES ``wildcard`` query analog):
@@ -1236,8 +1123,7 @@ class SearchEngine:
 
         Bounded by construction: ``sample_size`` point content reads, one
         dictionary df lookup per distinct sample term (<= sample docs x
-        tokens/doc; the serving tier answers from the cached dict, the
-        Spark tier from one bucket-pruned filter over term_stats)."""
+        tokens/doc), answered from the driver-side term dictionary."""
         from dataclasses import replace as _replace
 
         from gazetteer_search_spark.analyzer.tokenizer import tokenize_text
@@ -1503,17 +1389,9 @@ class SearchEngine:
         ]
 
     def _df_for_terms(self, terms: list[str]) -> dict[str, int]:
-        """Document frequencies for a bounded, query-derived term list.
-        Serving: the cached dictionary; Spark: a bucket-colocated filter over
-        term_stats collecting <= |terms| rows (query-side, k-bounded)."""
-        if self._local is not None:
-            return self._local.df_for_terms(terms)
-        rows = (
-            self._term_stats.filter(F.col("term").isin(list(terms)))
-            .select("term", "df")
-            .collect()
-        )
-        return {r.term: int(r.df) for r in rows}
+        """Document frequencies for a bounded, query-derived term list, from
+        the term dictionary (summed over generations)."""
+        return self.termdict.df_for_terms(terms)
 
     def mlt_groups(
         self,
@@ -1626,8 +1504,7 @@ class SearchEngine:
         expensive queries before paying for them. Never raises: an
         unparseable query returns ``valid: False`` with the error, matching
         ES's 200-with-valid:false envelope. Driver-side only: dictionary
-        lookups are k-bounded (serving: cached dict; Spark: a <=|terms|-row
-        bucket-pruned term_stats filter)."""
+        lookups are k-bounded reads of the term dictionary."""
         options = options or SearchOptions()
         try:
             return {"valid": True, **self._validate_plan(q, options)}
@@ -1748,8 +1625,8 @@ class SearchEngine:
         ``{"tokens": [{token, df, suggestions: [{term, df}, ...]}, ...],
         "did_you_mean": str | None}`` — ``did_you_mean`` substitutes each
         correctable token's best suggestion into the analyzed token
-        sequence (None when every token is in-vocabulary). Serving cost:
-        dictionary-only (cached term stats), zero postings decode."""
+        sequence (None when every token is in-vocabulary). Cost:
+        dictionary-only (the term dictionary), zero postings decode."""
         from gazetteer_search_spark.analyzer.tokenizer import tokenize_text
 
         toks = tokenize_text(q, joined_identifiers=False)
@@ -1796,8 +1673,8 @@ class SearchEngine:
         ``collate=True`` keeps only phrases whose every term is
         in-vocabulary (the ES collate-prune without the per-candidate
         query round-trip). Returns [(phrase, score)] ranked (score desc,
-        phrase asc), top-``k``, EXCLUDING the identity rewrite. Serving
-        cost: dictionary-only — zero postings decode."""
+        phrase asc), top-``k``, EXCLUDING the identity rewrite. Cost:
+        dictionary-only — zero postings decode."""
         import itertools
         import math as _math
 
@@ -1844,8 +1721,7 @@ class SearchEngine:
         document, sorted by term. The doc re-analyzes with the INDEX kernel
         from the stored-content sidecar (one partition-pruned point read,
         same as snippets), tf counts locally, df resolves from the term
-        dictionary (serving: cached dict; Spark: pruned term_stats scan) —
-        k-bounded everywhere, never a postings decode."""
+        dictionary — k-bounded, never a postings decode."""
         from gazetteer_search_spark.analyzer.tokenizer import tokenize_text
 
         content = self._doc_content([int(doc_id)])

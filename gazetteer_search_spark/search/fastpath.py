@@ -10,8 +10,10 @@ queries without launching a single Spark job:
   pruning on term_bucket plus parquet row-group statistics on ``term`` (the
   files are written sorted by term) reduce a query to a handful of row
   groups; payloads decode with the same numpy codec kernels.
-- term dictionary + docs metadata: loaded once, cached as numpy arrays
-  (a serving tier memory-maps exactly these per assigned bucket shard).
+- docs metadata: loaded once, cached as numpy arrays (a serving tier
+  memory-maps exactly these per assigned bucket shard). The term dictionary
+  (expansions, suggest, df lookups) is not this executor's: every engine
+  form reads it from one driver-side ``search/termdict.TermDict``.
 - scoring: identical math to the DataFrame engine — per-group dis_max with
   per-term (cross-field) weights, score sum, msm gate, matched-clause mask,
   doc-side filters/boosts, round(score,9)/doc_id deterministic rank.
@@ -38,10 +40,6 @@ from gazetteer_search_spark.index.builder import Index, term_bucket_py
 Hit = namedtuple(
     "Hit", ["doc_id", "score", "matched_required", "matched_mask", "repo", "path", "lang"]
 )
-
-MAX_PREFIX_EXPANSIONS = 128
-MAX_FUZZY_EXPANSIONS = 32
-MAX_REGEX_EXPANSIONS = 128  # Lucene top_terms_N rewrite cap (wildcard/regexp)
 
 
 def _meta(v):
@@ -109,70 +107,6 @@ def rows_from_cardinality_parts(
         (k, int(c), int(ndist.get(k, 0)))
         for k, c in sorted(counts.items())
     ]
-
-
-def damerau_levenshtein(a: str, b: str, cap: int = 2) -> int:
-    """UNRESTRICTED Damerau-Levenshtein distance (transposed letters may be
-    edited again — e.g. dl("ca", "abc") == 2 where the restricted/OSA form
-    gives 3), truncated at ``cap + 1``: once the row minimum exceeds the
-    cap the exact value doesn't matter and the scan exits early. This is
-    the variant DuckDB's native ``damerau_levenshtein`` implements, so the
-    three fuzziness=2 implementations (Spark pandas-UDF dictionary scan,
-    this serving twin, the DuckDB oracle) agree exactly."""
-    if a == b:
-        return 0
-    la, lb = len(a), len(b)
-    if abs(la - lb) > cap:
-        return cap + 1
-    # Lowrance-Wagner: full (la+2) x (lb+2) table with the "last occurrence"
-    # row/col registers; strings here are dictionary terms (short), so the
-    # quadratic table is a handful of ints
-    inf = la + lb
-    da: dict[str, int] = {}
-    d = [[inf] * (lb + 2) for _ in range(la + 2)]
-    for i in range(la + 1):
-        d[i + 1][1] = i
-    for j in range(lb + 1):
-        d[1][j + 1] = j
-    for i in range(1, la + 1):
-        db = 0
-        best = inf
-        for j in range(1, lb + 1):
-            k = da.get(b[j - 1], 0)
-            m = db
-            if a[i - 1] == b[j - 1]:
-                cost = 0
-                db = j
-            else:
-                cost = 1
-            d[i + 1][j + 1] = min(
-                d[i][j] + cost,              # substitute / match
-                d[i + 1][j] + 1,             # insert
-                d[i][j + 1] + 1,             # delete
-                d[k][m] + (i - k - 1) + 1 + (j - m - 1),  # transpose
-            )
-            best = min(best, d[i + 1][j + 1])
-        da[a[i - 1]] = i
-        if best > cap:
-            return cap + 1
-    return d[la + 1][lb + 1]
-
-
-def _levenshtein(a: str, b: str) -> int:
-    """Classic edit distance — same function as Spark's levenshtein and
-    DuckDB's. The fuzzy expansion combines it with the adjacent-transposition
-    set (engine.transpositions) for OSA/Damerau<=1 semantics."""
-    if a == b:
-        return 0
-    if len(a) < len(b):
-        a, b = b, a
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        for j, cb in enumerate(b, 1):
-            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
-        prev = cur
-    return prev[-1]
 
 
 class DecodeCache(dict):
@@ -279,16 +213,7 @@ class LocalExecutor:
         self._ds = ds.dataset(index.paths.postings, partitioning="hive")
         # block-level attribute pruning support (index format >= 0.7)
         self._has_attr = "attr_bits" in self._ds.schema.names
-        self._term_stats: pd.DataFrame | None = None
         self._docs: dict | None = None
-        # expansion memo: a serving node sees the same prefixes/typos over and
-        # over; entries are tiny (term lists) but the KEY SPACE is unbounded
-        # (every distinct typo ever typed) — LRU-bound so a long-lived node
-        # holds memory flat (VERDICT r2 "what's wrong" #4)
-        from collections import OrderedDict
-
-        self._expand_cache: OrderedDict[tuple[str, str], list[str]] = OrderedDict()
-        self._expand_cache_max = 4096
         # block decode/skip evidence for the serving-path pruning (judge
         # criterion: skipped > 0 on a hot-term query)
         self.counters = LocalCounters()
@@ -326,16 +251,6 @@ class LocalExecutor:
         self.decoded_cache = DecodeCache()
 
     # ---- lazy caches ---------------------------------------------------------
-    def _load_term_stats(self) -> pd.DataFrame:
-        if self._term_stats is None:
-            import pyarrow.dataset as ds
-
-            t = ds.dataset(self.index.paths.term_stats, partitioning="hive").to_table(
-                columns=["term", "df"]
-            )
-            self._term_stats = t.to_pandas()
-        return self._term_stats
-
     def _load_docs(self) -> dict:
         if self._docs is None:
             import pyarrow.dataset as ds
@@ -411,114 +326,6 @@ class LocalExecutor:
                 self._doc_meta_cache.move_to_end(i)
                 out[i] = self._doc_meta_cache[i]
         return out
-
-    # ---- expansions (mirror engine.expand_* exactly) -------------------------
-    def _cache_put(self, key: tuple[str, str], val: list[str]) -> None:
-        self._expand_cache[key] = val
-        self._expand_cache.move_to_end(key)
-        while len(self._expand_cache) > self._expand_cache_max:
-            self._expand_cache.popitem(last=False)
-
-    def expand_prefix(self, prefix: str) -> list[str]:
-        key = ("p", prefix)
-        if key not in self._expand_cache:
-            ts = self._load_term_stats()
-            m = ts[ts["term"].str.startswith(prefix)]
-            if ":" not in prefix:
-                # bare prefix = content namespace only; a 'field:' prefix
-                # explicitly targets that field's term namespace
-                m = m[~m["term"].str.contains(":")]
-            m = m.sort_values(["df", "term"], ascending=[False, True])
-            self._cache_put(key, m["term"].head(MAX_PREFIX_EXPANSIONS).tolist())
-        else:
-            self._expand_cache.move_to_end(key)
-        return self._expand_cache[key]
-
-    def suggest(
-        self, prefix: str, k: int | None = 10
-    ) -> list[tuple[str, int]]:
-        """Autocomplete: content-namespace dictionary terms starting with
-        ``prefix``, ranked (df desc, term asc), with their doc frequencies —
-        the ES completion-suggester analog over the same cached term dict
-        expand_prefix reads (one in-memory scan, zero I/O when warm).
-        ``k=None`` returns every match (the multi-generation merge needs
-        untruncated per-generation lists to sum df correctly)."""
-        ts = self._load_term_stats()
-        m = ts[ts["term"].str.startswith(prefix) & ~ts["term"].str.contains(":")]
-        m = m.sort_values(["df", "term"], ascending=[False, True])
-        if k is not None:
-            m = m.head(k)
-        return list(zip(m["term"].tolist(), m["df"].astype(int).tolist()))
-
-    def df_for_terms(self, terms: list[str]) -> dict[str, int]:
-        """Document frequencies for a bounded term list, from the cached
-        dictionary (query-side lookups: more-like-this term selection)."""
-        ts = self._load_term_stats()
-        m = ts[ts["term"].isin(terms)]
-        return dict(zip(m["term"].tolist(), m["df"].astype(int).tolist()))
-
-    def expand_regexp(self, anchored: str, lit_prefix: str = "") -> list[str]:
-        """Regexp/wildcard expansion over the cached dictionary — the serving
-        twin of engine.expand_regexp. ``anchored`` is the portable
-        ``(?i)^(?:pat)$`` form (patterns.anchored_ci); the literal prefix
-        narrows the scan exactly like the Spark path's startswith pushdown."""
-        key = ("r", anchored)
-        if key not in self._expand_cache:
-            import re as _re
-
-            rx = _re.compile(anchored)
-            ts = self._load_term_stats()
-            m = ts[~ts["term"].str.contains(":")]
-            if lit_prefix:
-                m = m[m["term"].str.startswith(lit_prefix)]
-            keep = [rx.match(t) is not None for t in m["term"].tolist()]
-            m = m[np.asarray(keep, dtype=bool)] if len(m) else m
-            m = m.sort_values(["df", "term"], ascending=[False, True])
-            self._cache_put(key, m["term"].head(MAX_REGEX_EXPANSIONS).tolist())
-        else:
-            self._expand_cache.move_to_end(key)
-        return self._expand_cache[key]
-
-    def expand_fuzzy(self, term: str, max_edits: int = 1) -> list[str]:
-        if max_edits <= 0:
-            return []
-        key = ("f", term, max_edits)
-        if key not in self._expand_cache:
-            from gazetteer_search_spark.search.engine import transpositions
-
-            ts = self._load_term_stats()
-            n = len(term)
-            lens = ts["term"].str.len()
-            cand = ts[
-                (lens >= n - max_edits)
-                & (lens <= n + max_edits)
-                & ~ts["term"].str.contains(":")
-            ]
-            if max_edits == 1:
-                # OSA <= 1 (ES fuzziness=1 counts a transposition as one
-                # edit): Levenshtein <= 1 OR adjacent-transposition
-                # membership — same decomposition as the Spark path and
-                # the DuckDB oracle
-                trans = transpositions(term)
-                keep = [
-                    _levenshtein(t, term) <= 1 or t in trans
-                    for t in cand["term"].tolist()
-                ]
-            else:
-                # fuzziness=2: unrestricted Damerau-Levenshtein, the same
-                # function the Spark pandas UDF and DuckDB's native
-                # damerau_levenshtein compute — banded scan of the cached
-                # dictionary (Lucene runs its automaton over the same dict)
-                keep = [
-                    damerau_levenshtein(t, term, cap=2) <= 2
-                    for t in cand["term"].tolist()
-                ]
-            cand = cand[np.asarray(keep, dtype=bool)] if len(cand) else cand
-            cand = cand.sort_values(["df", "term"], ascending=[False, True])
-            self._cache_put(key, cand["term"].head(MAX_FUZZY_EXPANSIONS).tolist())
-        else:
-            self._expand_cache.move_to_end(key)
-        return self._expand_cache[key]
 
     # ---- postings ------------------------------------------------------------
     def _read_blocks(self, terms: list[str]) -> pd.DataFrame:

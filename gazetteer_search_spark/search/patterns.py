@@ -10,18 +10,17 @@ other expansion group (prefix P3 / fuzzy P15 share the shape — the reference
 builds its prefix groups the same way, MainAddressQueryBuilder.java:115-168).
 
 Portability contract: one anchored, case-insensitive pattern string drives
-all three implementations —
+both implementations —
 
-- Spark   ``F.col("term").rlike(anchored)``   (Java java.util.regex)
-- serving ``re`` over the cached dictionary    (Python re)
+- engine  ``re`` over the term dictionary      (Python re, search/termdict.py)
 - oracle  ``regexp_matches(term, anchored)``   (DuckDB RE2)
 
 ``anchored_ci`` builds ``(?i)^(?:pat)$`` — the inline flag and the anchors
-mean FULL, case-folded term match in all three engines (rlike and RE2
-otherwise substring-search). Callers should stick to the common dialect
-subset (literals, ``.``, classes, ``*``/``+``/``?``, alternation, ``{m,n}``);
-backrefs/lookaround are Java/Python-only and rejected nowhere here — they
-simply make the oracle diverge, so tests pin the portable subset.
+mean FULL, case-folded term match in both (RE2 otherwise substring-searches).
+Callers should stick to the common dialect subset (literals, ``.``, classes,
+``*``/``+``/``?``, alternation, ``{m,n}``); backrefs/lookaround are
+Python-only and rejected nowhere here — they simply make the oracle
+diverge, so tests pin the portable subset.
 
 Query syntax (extract_patterns): whitespace-delimited ``/regex/`` tokens and
 glob tokens containing ``*``/``?`` lift out of the raw query before analysis;

@@ -1171,7 +1171,7 @@ def _make_handler(
             over-represented in the stored content of the query's best
             ``sample`` hits relative to the corpus dictionary, JLH-scored.
             Bounded per request: ``sample`` point content reads + one
-            cached-dictionary df lookup per distinct sample term; no
+            term-dictionary df lookup per distinct sample term; no
             corpus-shaped work (that form is the Spark tier's
             significant_terms). 400 on a no-stored-content index, with the
             rebuild hint."""

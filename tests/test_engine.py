@@ -89,25 +89,32 @@ def test_fuzzy_transposition_one_edit(engine):
     (MainAddressQueryBuilder.java:291-293 -> Damerau/OSA); plain Levenshtein
     would cost "emrge"->"merge" two and miss — the most common typo class
     (VERDICT r3 Missing #2)."""
-    from gazetteer_search_spark.search.engine import transpositions
+    from gazetteer_search_spark.search.termdict import (
+        damerau_levenshtein,
+        transpositions,
+    )
 
     assert "merge" in transpositions("emrge")
     exp = engine.expand_fuzzy("emrge")  # transposed typo
     assert "merge" in exp
-    # serving path agrees (same decomposition in fastpath)
-    from gazetteer_search_spark.search.fastpath import LocalExecutor
-
-    assert "merge" in LocalExecutor(engine.index).expand_fuzzy("emrge")
-
-
-def test_fuzziness_2_expansion_three_tiers(engine):
-    """fuzziness=2 (ES/Lucene max): unrestricted Damerau-Levenshtein <= 2.
-    Spark pandas-UDF dictionary scan == serving banded scan == brute-force
-    recompute over the dictionary; a distance-2 typo invisible at <=1."""
-    from gazetteer_search_spark.search.fastpath import (
-        LocalExecutor,
-        damerau_levenshtein,
+    # brute force over term_stats: every term within one Damerau edit
+    # (OSA and unrestricted agree at one edit), df-ranked, capped
+    ts = sorted(
+        ((r.term, int(r.df)) for r in engine.index.term_stats.collect()),
+        key=lambda x: (-x[1], x[0]),
     )
+    brute = [
+        t for t, _ in ts
+        if ":" not in t and damerau_levenshtein(t, "emrge", cap=1) <= 1
+    ]
+    assert exp == brute[:32]
+
+
+def test_fuzziness_2_expansion_three_tiers(spark, engine):
+    """fuzziness=2 (ES/Lucene max): unrestricted Damerau-Levenshtein <= 2.
+    The Spark and serving engines' banded dictionary scan == brute-force
+    recompute over term_stats; a distance-2 typo invisible at <=1."""
+    from gazetteer_search_spark.search.termdict import damerau_levenshtein
 
     # unit: unrestricted form (OSA would give 3 for ca->abc), cap truncation
     assert damerau_levenshtein("ca", "abc") == 2
@@ -119,12 +126,13 @@ def test_fuzziness_2_expansion_three_tiers(engine):
     assert "merge" not in engine.expand_fuzzy(typo, 1)
     spark_exp = engine.expand_fuzzy(typo, 2)
     assert "merge" in spark_exp
-    serve_exp = LocalExecutor(engine.index).expand_fuzzy(typo, 2)
-    assert serve_exp == spark_exp
+    serve_exp = SearchEngine(spark, engine.index, serving=True).expand_fuzzy(
+        typo, 2
+    )
     # brute force over the full dictionary (df-ranked, capped like both)
     ts = [
         (r.term, int(r.df))
-        for r in engine._term_stats.select("term", "df").collect()
+        for r in engine.index.term_stats.select("term", "df").collect()
         if ":" not in r.term
     ]
     brute = sorted(
@@ -132,6 +140,7 @@ def test_fuzziness_2_expansion_three_tiers(engine):
         key=lambda t: (-dict(ts)[t], t),
     )[:32]
     assert spark_exp == brute
+    assert serve_exp == brute
     # max_edits=0 expands nothing
     assert engine.expand_fuzzy(typo, 0) == []
 

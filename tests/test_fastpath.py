@@ -6,6 +6,7 @@ from __future__ import annotations
 import time
 
 import pytest
+from pyspark.sql import functions as F
 
 from gazetteer_search_spark.index import builder
 from gazetteer_search_spark.search.engine import SearchEngine, SearchOptions, TermGroup
@@ -67,9 +68,26 @@ def test_local_matches_spark_engine(spark_eng, local_eng, groups, msm, opts):
         assert (g.path, g.lang) == (w.path, w.lang)
 
 
-def test_local_expansions_match_spark(spark_eng, local_eng):
-    assert local_eng.expand_prefix("merge") == spark_eng.expand_prefix("merge")
-    assert local_eng.expand_fuzzy("mergf") == spark_eng.expand_fuzzy("mergf")
+def _content_dict(index) -> list[tuple[str, int]]:
+    """Brute-force reference: the content-namespace (term, df) rows of
+    term_stats in expansion order (df desc, term asc)."""
+    rows = index.term_stats.filter(~F.col("term").contains(":")).collect()
+    return sorted(((r.term, int(r.df)) for r in rows), key=lambda x: (-x[1], x[0]))
+
+
+def test_local_expansions_match_brute_force(index, local_eng):
+    from gazetteer_search_spark.search.termdict import (
+        MAX_FUZZY_EXPANSIONS,
+        MAX_PREFIX_EXPANSIONS,
+        damerau_levenshtein,
+    )
+
+    ranked = _content_dict(index)
+    want = [t for t, _ in ranked if t.startswith("merge")][:MAX_PREFIX_EXPANSIONS]
+    assert local_eng.expand_prefix("merge") == want and want
+    # Damerau <= 1 (OSA and unrestricted agree at one edit)
+    want = [t for t, _ in ranked if damerau_levenshtein(t, "mergf", cap=1) <= 1]
+    assert local_eng.expand_fuzzy("mergf") == want[:MAX_FUZZY_EXPANSIONS] and want
 
 
 def test_local_ladder_and_trim(spark_eng, local_eng):
@@ -238,16 +256,18 @@ def test_null_metadata_preserved(spark, tmp_path_factory):
     assert any(r.repo is None for r in hits) and any(r.lang is None for r in hits)
 
 
-def test_expansion_cache_bounded(local_eng):
+def test_expansion_cache_bounded(index):
     """LRU bound: a long-lived serving node's expansion memo holds flat."""
-    ex = local_eng._local
-    ex._expand_cache_max = 16
+    from gazetteer_search_spark.search.termdict import TermDict
+
+    td = TermDict([index.paths.term_stats])
+    td.memo_max = 16
     for i in range(200):
-        ex.expand_prefix(f"zz{i}x")
-    assert len(ex._expand_cache) <= 16
+        td.expand_prefix(f"zz{i}x")
+    assert len(td._memo) <= 16
     # repeat lookups still hit the memo (most-recent keys retained)
-    ex.expand_prefix("zz199x")
-    assert ("p", "zz199x") in ex._expand_cache
+    td.expand_prefix("zz199x")
+    assert ("p", "zz199x") in td._memo
 
 
 def test_serving_blockmax_pruning_skips_blocks(spark, tmp_path_factory):
@@ -555,13 +575,16 @@ def test_decoded_block_cache_hits_and_bound(local_eng):
 
 
 def test_serving_caches_bounded_under_churn(spark, index):
-    """Long-lived serving node: all four per-executor caches (expansion memo,
-    block cache, payload LRU, decoded-block cache, doc-meta LRU) hold their
-    bounds across hundreds of distinct queries — memory stays flat."""
+    """Long-lived serving node: the dictionary's expansion memo and the
+    executor's caches (block cache, payload LRU, decoded-block cache,
+    doc-meta LRU) hold their bounds across hundreds of distinct queries —
+    memory stays flat."""
     from gazetteer_search_spark.search.fastpath import LocalExecutor
+    from gazetteer_search_spark.search.termdict import TermDict
 
     ex = LocalExecutor(index, lazy_payloads=True)
-    ex._expand_cache_max = 64
+    td = TermDict([index.paths.term_stats])
+    td.memo_max = 64
     ex.block_cache_max_bytes = 1 << 20
     ex.decoded_cache.max_bytes = 1 << 20
     ex.doc_meta_cache_max = 500
@@ -578,8 +601,8 @@ def test_serving_caches_bounded_under_churn(spark, index):
             [_grp(0, [t1]), _grp(1, [t2])], rng.choice([1, 2]),
             SearchOptions(k=rng.choice([5, 10])),
         )
-        ex.expand_prefix(f"pfx{i}")
-    assert len(ex._expand_cache) <= 64
+        td.expand_prefix(f"pfx{i}")
+    assert len(td._memo) <= 64
     assert ex.decoded_cache.bytes <= ex.decoded_cache.max_bytes
     assert len(ex._doc_meta_cache) <= 500
     # block cache: bytes accounting may exceed transiently mid-query but the
@@ -587,18 +610,16 @@ def test_serving_caches_bounded_under_churn(spark, index):
     assert ex._block_cache_bytes <= ex.block_cache_max_bytes + (1 << 20)
 
 
-def test_suggest_serving_equals_spark_path(spark, index):
-    """engine.suggest: the serving tier's cached-dictionary scan and the
-    Spark TakeOrdered over term_stats produce the identical ranked
-    (term, df) list; field-namespace terms never appear."""
+def test_suggest_matches_brute_force(spark, index):
+    """engine.suggest returns the ranked (term, df) list a brute-force scan
+    of term_stats gives; field-namespace terms never appear."""
     from gazetteer_search_spark.search.engine import SearchEngine
 
     srv = SearchEngine(spark, index, serving=True)
-    sp = SearchEngine(spark, index)
+    ranked = _content_dict(index)
     for pfx in ("me", "b", "s"):
         a = srv.suggest(pfx, 10)
-        bq = sp.suggest(pfx, 10)
-        assert a == bq
+        assert a == [(t, d) for t, d in ranked if t.startswith(pfx)][:10]
         assert all(t.startswith(pfx) and ":" not in t for t, _ in a)
         dfs = [d for _, d in a]
         assert dfs == sorted(dfs, reverse=True)
@@ -606,3 +627,31 @@ def test_suggest_serving_equals_spark_path(spark, index):
 
     with _pytest.raises(ValueError):
         srv.suggest("")
+
+
+def test_termdict_byte_bound(spark, index, monkeypatch):
+    """A dictionary above MAX_TERMDICT_BYTES (checked from the parquet
+    footers before loading) makes every dictionary operation raise a
+    ValueError naming the bound and the dictionary's size; a query whose
+    ladder makes no dictionary call still answers."""
+    from gazetteer_search_spark.search import termdict
+
+    monkeypatch.setattr(termdict, "MAX_TERMDICT_BYTES", 64)
+    size = termdict._footer_bytes(index.paths.term_stats)
+    assert size > 64
+    eng = SearchEngine(spark, index, serving=True)
+    ops = [
+        lambda: eng.expand_prefix("me"),
+        lambda: eng.expand_fuzzy("mergf"),
+        lambda: eng.expand_regexp("me.ge"),
+        lambda: eng.expand_wildcard("me*ge"),
+        lambda: eng.suggest("me"),
+        lambda: eng._df_for_terms(["merge"]),
+    ]
+    for op in ops:
+        with pytest.raises(ValueError) as e:
+            op()
+        assert f"{size} bytes" in str(e.value)
+        assert "MAX_TERMDICT_BYTES bound of 64 bytes" in str(e.value)
+    hits = eng.search_hits("merge postings", SearchOptions(prefix=False, fuzzy=False))
+    assert hits

@@ -1,5 +1,5 @@
-"""Wildcard / regexp term queries (search/patterns.py): expansion parity
-across the Spark dictionary scan, the serving executor and plain Python re;
+"""Wildcard / regexp term queries (search/patterns.py): the Spark and serving
+engines' dictionary expansion against plain Python re over term_stats;
 ladder integration of /regex/ and glob query syntax (FIXTURES.md §3 model)."""
 
 from __future__ import annotations
@@ -10,8 +10,6 @@ import pytest
 
 from gazetteer_search_spark.index import builder
 from gazetteer_search_spark.search.engine import (
-    MAX_FUZZY_EXPANSIONS,
-    MAX_REGEX_EXPANSIONS,
     SearchEngine,
     SearchOptions,
     TermGroup,
@@ -21,6 +19,10 @@ from gazetteer_search_spark.search.patterns import (
     extract_patterns,
     literal_prefix,
     wildcard_to_regex,
+)
+from gazetteer_search_spark.search.termdict import (
+    MAX_FUZZY_EXPANSIONS,
+    MAX_REGEX_EXPANSIONS,
 )
 from gazetteer_search_spark.sources import synthetic_corpus
 
@@ -91,13 +93,19 @@ def test_extract_patterns():
         extract_patterns("/bad[/")
 
 
-# ---- expansion parity: Spark scan vs serving executor vs Python re ----------
+# ---- expansion: Spark and serving engines vs Python re ----------------------
+
+def _content_terms(engine):
+    """term_stats rows of the content namespace, as pandas (term, df)."""
+    m = engine.index.term_stats.select("term", "df").toPandas()
+    return m[~m["term"].str.contains(":")]
+
 
 def _brute_expand(engine, regex_body):
     """Reference expansion: Python re over the full collected dictionary,
     df-ranked, capped — what both engine paths must reproduce."""
     rx = re.compile(anchored_ci(regex_body))
-    rows = engine._term_stats.select("term", "df").collect()
+    rows = _content_terms(engine).itertuples()
     hits = [(r.term, int(r.df)) for r in rows if rx.match(r.term)]
     hits.sort(key=lambda x: (-x[1], x[0]))
     return [t for t, _ in hits[:MAX_REGEX_EXPANSIONS]]
@@ -115,8 +123,8 @@ def _brute_expand(engine, regex_body):
 )
 def test_expand_regexp_three_way(engine, serving, body):
     want = _brute_expand(engine, body)
-    assert engine.expand_regexp(body) == want  # Spark rlike path
-    assert serving.expand_regexp(body) == want  # serving re path
+    assert engine.expand_regexp(body) == want  # Spark engine
+    assert serving.expand_regexp(body) == want  # serving engine
     assert want, f"pattern {body!r} should match something in the fixture vocab"
 
 
@@ -224,15 +232,13 @@ def test_trailing_question_mark_is_punctuation(spark):
 
 # ---- property: prefix-pruned expansion == unpruned brute force ---------------
 
-def _brute_expand_dict(executor, body: str) -> list[str]:
+def _brute_expand_dict(m, body: str) -> list[str]:
     """Ground truth: anchored case-insensitive match over the WHOLE
-    content-token dictionary (no literal-prefix pruning), df-ranked and
-    capped exactly like the production path."""
+    content-token dictionary ``m`` (no literal-prefix pruning), df-ranked
+    and capped exactly like the production path."""
     from gazetteer_search_spark.search.patterns import anchored_ci
 
     rx = re.compile(anchored_ci(body))
-    ts = executor._load_term_stats()
-    m = ts[~ts["term"].str.contains(":")]
     keep = [rx.match(t) is not None for t in m["term"].tolist()]
     m = m[keep] if len(m) else m
     m = m.sort_values(["df", "term"], ascending=[False, True])
@@ -262,13 +268,14 @@ def test_regexp_expansion_prefix_pruning_is_lossless(serving):
         st.tuples(branch, branch).map(lambda bb: f"{bb[0]}|{bb[1]}"),
     )
 
+    m = _content_terms(serving)
+
     @settings(max_examples=60, deadline=None)
     @given(body=body)
     def check(body):
-        ex = serving._local
-        ex._expand_cache.clear()  # property must not read a cached answer
+        serving.termdict._memo.clear()  # property must not read a cached answer
         got = serving.expand_regexp(body)
-        assert got == _brute_expand_dict(ex, body), body
+        assert got == _brute_expand_dict(m, body), body
 
     check()
 
@@ -335,9 +342,8 @@ def test_fuzzy_expansion_matches_independent_dp(serving):
     decomposition, not just the distance function."""
     from hypothesis import given, settings, strategies as st
 
-    ex = serving._local
-    ts = ex._load_term_stats()
-    vocab = [t for t in ts["term"].tolist() if ":" not in t]
+    ts = _content_terms(serving)
+    vocab = ts["term"].tolist()
     alphabet = "abcdemnoprst"
 
     def mutate(t: str, seed: int) -> str:
@@ -366,7 +372,7 @@ def test_fuzzy_expansion_matches_independent_dp(serving):
     @settings(max_examples=25, deadline=None)
     @given(term=probe, edits=st.sampled_from([1, 2]))
     def check(term, edits):
-        ex._expand_cache.clear()
+        serving.termdict._memo.clear()
         got = serving.expand_fuzzy(term, edits)
         dist = _osa if edits == 1 else _dl
         m = ts[[(":" not in t) and dist(t, term) <= edits for t in ts["term"]]]

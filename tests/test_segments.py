@@ -824,6 +824,65 @@ def test_multigen_pattern_queries_work(spark, base, tmp_path_factory):
     assert set(eng.expand_regexp("zzzregex.*")) == {"zzzregexonly"}
 
 
+def test_multigen_expansions_rank_by_summed_df(
+    spark, base, tmp_path_factory, monkeypatch
+):
+    """Multi-generation prefix / fuzzy / regexp expansions are the
+    (df desc, term asc) cut over the generations' SUMMED term_stats — what
+    compaction would serve (regression: each generation's capped list was
+    concatenated base first, so once the base alone filled the cap a
+    segment-only term that outranks every base term by df was dropped)."""
+    import re
+    import shutil
+
+    from gazetteer_search_spark.search import termdict
+    from gazetteer_search_spark.search.patterns import anchored_ci
+
+    root0, corpus0, _ = base
+    root = str(tmp_path_factory.mktemp("seg_dfrank"))
+    shutil.rmtree(root)
+    shutil.copytree(root0, root)
+    # 'sym12q' (df 40, segment only) shares prefix and one-edit neighborhood
+    # with dozens of df-1/df-2 base identifiers (sym12, sym120, sym1, ...)
+    segments.add_segment(spark, _v(corpus0, 0, 40, "v2", "sym12q"), root, n_buckets=4)
+    for cap in ("PREFIX", "FUZZY", "REGEX"):
+        monkeypatch.setattr(termdict, f"MAX_{cap}_EXPANSIONS", 3)
+
+    gens = [root] + [
+        s["path"] for s in segments.list_segments(root) if s["n_docs"] > 0
+    ]
+    assert len(gens) == 2
+    ts = None
+    for g in gens:
+        d = spark.read.parquet(builder.IndexPaths(g).term_stats).select("term", "df")
+        ts = d if ts is None else ts.unionByName(d)
+    summed = {
+        r.term: int(r.df)
+        for r in ts.groupBy("term").agg(F.sum("df").alias("df")).collect()
+        if ":" not in r.term
+    }
+
+    def brute(keep):
+        return sorted(
+            (t for t in summed if keep(t)), key=lambda t: (-summed[t], t)
+        )[:3]
+
+    eng = segments.open_multi_search(root)
+    want = brute(lambda t: t.startswith("sym12"))
+    assert want[0] == "sym12q"
+    assert eng.expand_prefix("sym12") == want
+    for edits in (1, 2):
+        want = brute(
+            lambda t: termdict.damerau_levenshtein(t, "sym12", cap=edits) <= edits
+        )
+        assert "sym12q" in want  # 2 edits also reach the df-1540 'sym'
+        assert eng.expand_fuzzy("sym12", edits) == want
+    rx = re.compile(anchored_ci("sym1.*q?"))
+    want = brute(lambda t: rx.match(t) is not None)
+    assert want[0] == "sym12q"
+    assert eng.expand_regexp("sym1.*q?") == want
+
+
 def test_multigen_search_phrase_rows_sees_segment_hits(spark, tmp_path_factory):
     """search_phrase_rows on a multi-generation engine verifies EVERY
     generation's positions sidecar (regression: base-only verification
