@@ -9,7 +9,7 @@ This package owns those parts natively on Spark:
 
 - ``analyzer``   code-aware tokenizer (vectorized pandas/Arrow UDF) + query IR
                  (analog of reference IndexAnalyzer/QueryAnalyzerImpl)
-- ``index``      posting-list build: delta+varbyte blocks, block-max metadata,
+- ``index``      posting-list build: delta+FOR blocks, block-max metadata,
                  salted hot-term shuffle, partition-granular manifest resume
                  (analog of the delegated Lucene index build + ImportMeta)
 - ``search``     BM25 (k1=1.2, b=0.75) scoring, AND / min_should_match /

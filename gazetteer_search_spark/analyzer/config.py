@@ -168,10 +168,6 @@ def write_index_rules(index_root: str, rules: AnalyzerRules) -> None:
     os.replace(tmp, os.path.join(index_root, RULES_FILENAME))
 
 
-def load_index_rules(index_root: str) -> AnalyzerRules | None:
-    """The rule set an index was built with; None for pre-0.6 indexes
-    (callers fall back to DEFAULT_RULES — exactly what built them)."""
-    p = os.path.join(index_root, RULES_FILENAME)
-    if not os.path.exists(p):
-        return None
-    return AnalyzerRules.from_file(p)
+def load_index_rules(index_root: str) -> AnalyzerRules:
+    """The rule set an index was built with (every build persists it)."""
+    return AnalyzerRules.from_file(os.path.join(index_root, RULES_FILENAME))

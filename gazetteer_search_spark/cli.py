@@ -48,7 +48,7 @@ def cmd_build_index(args: argparse.Namespace) -> None:
     t0 = time.time()
     idx = build_index(
         spark, corpus, args.out,
-        tokenizer=args.tokenizer, n_buckets=args.n_buckets,
+        n_buckets=args.n_buckets,
         postings_per_group=args.postings_per_group,
         max_buckets_per_commit=args.max_buckets_per_commit,
         extra_fields=extra_fields or None,
@@ -60,7 +60,6 @@ def cmd_build_index(args: argparse.Namespace) -> None:
         cluster_by=tuple(args.cluster_by.split(",")) if args.cluster_by else None,
         positions=args.positions,
         store_content=args.store_content,
-        postings_codec=args.codec,
     )
     print(json.dumps({
         "out": args.out, "n_docs": idx.n_docs,
@@ -79,10 +78,8 @@ def cmd_reindex(args: argparse.Namespace) -> None:
     idx = reindex(
         spark, args.index, args.out,
         where=args.where,
-        tokenizer=args.tokenizer,
         n_buckets=args.n_buckets if args.n_buckets is not None else _INHERIT,
         analyzer_rules=args.rules if args.rules is not None else _INHERIT,
-        postings_codec=args.codec if args.codec is not None else _INHERIT,
         attr_dim=(args.attr_dim or None) if args.attr_dim is not None else _INHERIT,
         cluster_by=(
             (tuple(args.cluster_by.split(",")) if args.cluster_by else None)
@@ -1085,7 +1082,6 @@ def main(argv: list[str] | None = None) -> None:
     src.add_argument("--source", help="parquet path of the corpus")
     src.add_argument("--table", help="catalog table name (e.g. an Iceberg table)")
     b.add_argument("--out", required=True)
-    b.add_argument("--tokenizer", default="pandas", choices=["pandas", "native"])
     b.add_argument("--n-buckets", type=int, default=64)
     b.add_argument("--postings-per-group", type=int, default=1 << 20)
     b.add_argument("--max-buckets-per-commit", type=int, default=None)
@@ -1104,12 +1100,6 @@ def main(argv: list[str] | None = None) -> None:
         "--attr-dim", default="lang", metavar="COL",
         help="docs column to sub-partition posting blocks by for "
         "block-level filter pruning (default: lang; '' disables)",
-    )
-    b.add_argument(
-        "--codec", default=None, choices=["for", "vbyte"],
-        help="posting-block payload codec (default: for — fixed-width bit "
-        "packing, ~3.3x faster decode + ~30%% smaller than vbyte; a "
-        "resumed build keeps its on-disk codec)",
     )
     b.add_argument(
         "--positions", action="store_true",
@@ -1144,7 +1134,6 @@ def main(argv: list[str] | None = None) -> None:
         help="SQL predicate over the stored doc columns (the _reindex "
         "body-query analog), e.g. \"lang = 'python'\"",
     )
-    ri.add_argument("--tokenizer", default="pandas", choices=["pandas", "native"])
     ri.add_argument(
         "--n-buckets", type=int, default=None,
         help="override the inherited term-bucket count",
@@ -1153,10 +1142,6 @@ def main(argv: list[str] | None = None) -> None:
         "--rules", metavar="RULES_JSON", default=None,
         help="NEW analyzer rule config (the reason to reindex: retokenize "
         "under changed settings); default inherits the source's rules",
-    )
-    ri.add_argument(
-        "--codec", default=None, choices=["for", "vbyte"],
-        help="override the inherited posting codec",
     )
     ri.add_argument(
         "--attr-dim", default=None, metavar="COL",

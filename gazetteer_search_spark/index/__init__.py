@@ -1,10 +1,4 @@
-from gazetteer_search_spark.index.codec import (  # noqa: F401
-    BLOCK_SIZE,
-    delta_varbyte_encode,
-    delta_varbyte_decode,
-    varbyte_encode,
-    varbyte_decode,
-)
+from gazetteer_search_spark.index.codec import BLOCK_SIZE  # noqa: F401
 from gazetteer_search_spark.index.builder import (  # noqa: F401
     IndexPaths,
     build_index,

@@ -9,7 +9,7 @@ the actual index). Here the whole build is one declarative Spark pipeline:
            --explode+groupBy(term,doc_id)--> term freqs        (shuffle 1)
            --groupBy(term)--> term_stats                        (shuffle 2)
            --join(df)+salt--> groupBy(term,salt) applyInPandas  (shuffle 3)
-           --> delta+varbyte blocks w/ block-max metadata --> parquet
+           --> delta+FOR blocks w/ block-max metadata --> parquet
 
 Scale design:
 - **Skew**: a hot term ("def" at 10^12-file scale) would put its whole posting
@@ -178,8 +178,8 @@ def _write_index_meta(root: str, meta: dict) -> None:
 
 
 def read_index_meta(root: str) -> dict:
-    """Index metadata dict; {} for pre-0.6 indexes (callers use legacy
-    fallbacks: no doc_part pushdown clause, default name key)."""
+    """Index metadata dict; {} when ``root`` has no index_meta.json (no
+    build has started there yet, or a pre-0.6 index)."""
     import json
 
     p = os.path.join(root, "index_meta.json")
@@ -187,6 +187,28 @@ def read_index_meta(root: str) -> dict:
         return {}
     with open(p) as f:
         return json.load(f)
+
+
+def read_current_meta(root: str) -> dict:
+    """``root``'s index metadata, refusing any index older than format 0.8.
+
+    0.8 is the one on-disk format this package reads and writes: FOR
+    posting payloads, code-aware tokens, and an index_meta.json recording
+    ``postings_codec == "for"``. Every reader of postings (both loaders,
+    verify, compaction, a resumed build) comes through here, so an older
+    index fails loudly instead of decoding its payloads wrongly. The way
+    out: ``reindex`` migrates a store_content index (it reads only docs
+    and tombstones, never postings); any other index is rebuilt from its
+    corpus."""
+    meta = read_index_meta(root)
+    if meta.get("postings_codec") != codec.FOR:
+        raise ValueError(
+            f"{root} is a pre-0.8 index (index_meta.json does not record "
+            f"postings_codec={codec.FOR!r}) and cannot be read: migrate a "
+            "store_content index with reindex, or rebuild it from the "
+            "corpus with build-index"
+        )
+    return meta
 
 
 def cluster_corpus_ids(corpus: DataFrame, cluster_by: tuple[str, ...]) -> DataFrame:
@@ -292,20 +314,13 @@ class Index:
     # persisted in index_meta.json (ADVICE r3 high: partitionBy materializes
     # only non-empty doc_part dirs, so the modulus must never be inferred
     # from the directory listing — a sparse segment would get it wrong and
-    # silently drop hits). None = pre-0.6 index: no doc_part pushdown clause.
-    n_doc_parts: int | None = None
+    # silently drop hits)
+    n_doc_parts: int = 16
     # full metadata dict (name_key_sql, analyzer_hash, ...)
     meta: dict = field(default_factory=dict)
     # (repo, path_prefix) -> resolved docID range, memoized per handle (a
     # serving node answers the same repo filters repeatedly)
     _range_cache: dict = field(default_factory=dict, repr=False)
-
-    @property
-    def ids_codec(self) -> str:
-        """Posting-block payload codec (index_meta ``postings_codec``):
-        ``for`` (fixed-width bit packing, 0.8+ default) or ``vbyte``
-        (pre-0.8 indexes — absent meta key)."""
-        return self.meta.get("postings_codec", codec.VBYTE)
 
     def doc_range_for(
         self, repo: str | None = None, path_prefix: str | None = None
@@ -421,7 +436,6 @@ def _pack_term(
     rows: list, term: str, bucket: int, salt: int,
     ids: np.ndarray, tfs: np.ndarray, scores: np.ndarray,
     attr_bits: int = -1, base_ord: int = 0, attrs: np.ndarray | None = None,
-    ids_codec: str = codec.VBYTE,
 ) -> int:
     """Append block rows for one (term, salt[, attr]) posting run. Pure
     numpy; the only Python loop is per *block* (>=BLOCK_SIZE postings each).
@@ -441,8 +455,8 @@ def _pack_term(
         btfs = tfs[b : b + bs]
         bsc = scores[b : b + bs]
         mn, mx = int(bids[0]), int(bids[-1])
-        id_b = codec.ids_encode(bids, mn, ids_codec)
-        tf_b = codec.tfs_encode(btfs, ids_codec)
+        id_b = codec.ids_encode(bids, mn)
+        tf_b = codec.tfs_encode(btfs)
         sc_b = codec.f64_encode(bsc)
         rows.append(
             (
@@ -486,21 +500,19 @@ def pack_term_run(
     rows: list, term: str, bucket: int, salt: int,
     ids: np.ndarray, tfs: np.ndarray, scores: np.ndarray,
     attrs: np.ndarray | None,
-    ids_codec: str = codec.VBYTE,
 ) -> None:
     """One (term, salt) posting run -> block rows, with the attribute
     layout decision (single-attr / per-attr split / hybrid byte-masked).
     Shared by the distributed pack kernel (_pack_groups) and the local
     micro-batch segment builder (index/localbuild.py)."""
     if attrs is None:
-        _pack_term(rows, term, bucket, salt, ids, tfs, scores, ids_codec=ids_codec)
+        _pack_term(rows, term, bucket, salt, ids, tfs, scores)
         return
     uattr = np.unique(attrs)
     if uattr.size == 1:
         _pack_term(
             rows, term, bucket, salt, ids, tfs, scores,
             attr_bits=attr_bit_value(min(int(uattr[0]), ATTR_OVERFLOW_ID)),
-            ids_codec=ids_codec,
         )
     elif ids.size >= ATTR_SPLIT_MIN:
         # big mixed run: per-attr sub-runs for values that can fill at least
@@ -518,7 +530,7 @@ def pack_term_run(
                 rows, term, bucket, salt,
                 ids[sub], tfs[sub], scores[sub],
                 attr_bits=attr_bit_value(min(int(aid), ATTR_OVERFLOW_ID)),
-                base_ord=base, ids_codec=ids_codec,
+                base_ord=base,
             )
         if small:
             rem = np.isin(attrs, np.asarray(small))
@@ -528,7 +540,7 @@ def pack_term_run(
             _pack_term(
                 rows, term, bucket, salt,
                 ids[rem], tfs[rem], scores[rem],
-                attr_bits=bits, base_ord=base, ids_codec=ids_codec,
+                attr_bits=bits, base_ord=base,
                 attrs=np.minimum(attrs[rem], ATTR_OVERFLOW_ID),
             )
     else:
@@ -540,23 +552,12 @@ def pack_term_run(
             bits |= attr_bit_value(min(int(aid), ATTR_OVERFLOW_ID))
         _pack_term(
             rows, term, bucket, salt, ids, tfs, scores,
-            attr_bits=bits, ids_codec=ids_codec,
+            attr_bits=bits,
             attrs=np.minimum(attrs, ATTR_OVERFLOW_ID),
         )
 
 
-def _make_pack_groups(ids_codec: str = codec.VBYTE):
-    """Close the pack kernel over the index's posting codec (index_meta
-    ``postings_codec``): the codec is an index-level layout decision, and
-    applyInPandas kernels receive only their group's rows."""
-
-    def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _pack_groups(pdf, ids_codec=ids_codec)
-
-    return _pack
-
-
-def _pack_groups(pdf: pd.DataFrame, ids_codec: str = codec.VBYTE) -> pd.DataFrame:
+def _pack_groups(pdf: pd.DataFrame) -> pd.DataFrame:
     """applyInPandas kernel: one (term_bucket, salt) group -> block rows for
     EVERY term in the group.
 
@@ -585,7 +586,6 @@ def _pack_groups(pdf: pd.DataFrame, ids_codec: str = codec.VBYTE) -> pd.DataFram
             rows, term, bucket, salt,
             ids_all[idx], tfs_all[idx], sc_all[idx],
             attr_all[idx] if attr_all is not None else None,
-            ids_codec=ids_codec,
         )
     return pd.DataFrame(rows, columns=[f.name for f in POSTINGS_SCHEMA.fields])
 
@@ -612,9 +612,13 @@ def build_index(
     cluster_by: tuple[str, ...] | None = None,
     positions: bool = False,
     store_content: bool = False,
-    postings_codec: str | None = None,
 ) -> Index:
     """Build (or resume) the full index under ``out_dir``.
+
+    ``tokenizer`` must be ``"pandas"``, the code-aware kernel the query
+    side analyzes with (the keyword stays for callers that pass it). A
+    resumed build refuses an ``out_dir`` holding a pre-0.8 index
+    (:func:`read_current_meta`).
 
     ``cluster_by`` (e.g. ``("repo", "path")``): reassign dense doc_ids in
     the given sort order (:func:`cluster_corpus_ids`) and persist per-major
@@ -665,7 +669,18 @@ def build_index(
     """
     import time as _time
 
+    if tokenizer != "pandas":
+        raise ValueError(
+            f"build_index: tokenizer {tokenizer!r} is not supported — "
+            "indexes are built with the 'pandas' code-aware tokenizer the "
+            "query side analyzes with"
+        )
     paths = IndexPaths(out_dir)
+    if resume and any(
+        os.path.exists(p)
+        for p in (os.path.join(out_dir, "index_meta.json"), paths.docs, paths.manifest)
+    ):
+        read_current_meta(out_dir)
     if docs_full is None and corpus.isEmpty():
         raise ValueError("build_index: corpus is empty — nothing to index")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -730,32 +745,13 @@ def build_index(
 
     rules_set = _acfg.resolve_rules(analyzer_rules)
     _acfg.write_index_rules(out_dir, rules_set)
-    # posting-block payload codec (index_meta "postings_codec"): FOR
-    # fixed-width bit packing by default for NEW indexes (~3.3x faster
-    # block decode + ~30% smaller payloads than VByte — index/codec.py);
-    # a RESUMED build keeps the codec its first run committed to (mixing
-    # codecs across buckets would corrupt reads), and absent meta means a
-    # pre-0.8 VByte index.
-    prior_meta = read_index_meta(out_dir) if resume else {}
-    if prior_meta.get("postings_codec"):
-        if postings_codec and postings_codec != prior_meta["postings_codec"]:
-            raise ValueError(
-                "resume cannot change postings_codec "
-                f"({prior_meta['postings_codec']!r} on disk, "
-                f"{postings_codec!r} requested)"
-            )
-        postings_codec = prior_meta["postings_codec"]
-    elif postings_codec is None:
-        postings_codec = codec.FOR
-    if postings_codec not in codec.CODECS:
-        raise ValueError(f"unknown postings_codec {postings_codec!r}")
     # persisted index-level metadata; written up-front so even a build killed
     # mid-way resumes with the same key/partitioning decisions
     _write_index_meta(
         out_dir,
         {
             "format": _pkg_version(),
-            "postings_codec": postings_codec,
+            "postings_codec": codec.FOR,
             "n_buckets": int(n_buckets),
             "n_doc_parts": int(n_doc_parts),
             "name_key_sql": name_key,
@@ -1069,7 +1065,7 @@ def build_index(
         if "attr_id" in part.columns:
             _pack_cols.append("attr_id")
         packed = part.select(*_pack_cols).groupBy("term_bucket", "salt").applyInPandas(
-            _make_pack_groups(postings_codec), schema=POSTINGS_SCHEMA
+            _pack_groups, schema=POSTINGS_SCHEMA
         )
         (
             packed.repartition(len(batch), "term_bucket")
@@ -1166,26 +1162,18 @@ def build_index(
 
 def load_index(spark: SparkSession, out_dir: str, n_buckets: int | None = None) -> Index:
     paths = IndexPaths(out_dir)
-    meta = read_index_meta(out_dir)
+    meta = read_current_meta(out_dir)
     cs = spark.read.parquet(paths.corpus_stats).collect()[0]
-    postings = spark.read.parquet(paths.postings)
-    if n_buckets is None:
-        n_buckets = meta.get("n_buckets") or (
-            spark.read.parquet(paths.manifest)
-            .agg(F.max("partition_id"))
-            .collect()[0][0]
-            + 1
-        )
     return Index(
         paths=paths,
         docs=spark.read.parquet(paths.docs),
-        postings=postings,
+        postings=spark.read.parquet(paths.postings),
         term_stats=spark.read.parquet(paths.term_stats),
         n_docs=int(cs.n_docs),
         avg_doc_len=float(cs.avg_doc_len),
-        n_buckets=n_buckets,
+        n_buckets=n_buckets if n_buckets is not None else int(meta["n_buckets"]),
         max_doc_id=int(cs.max_doc_id),
-        n_doc_parts=meta.get("n_doc_parts"),
+        n_doc_parts=int(meta["n_doc_parts"]),
         meta=meta,
     )
 
@@ -1200,15 +1188,8 @@ def load_index_local(out_dir: str, n_buckets: int | None = None) -> Index:
     import pyarrow.dataset as ds_mod
 
     paths = IndexPaths(out_dir)
-    meta = read_index_meta(out_dir)
+    meta = read_current_meta(out_dir)
     cs = ds_mod.dataset(paths.corpus_stats).to_table().to_pylist()[0]
-    if n_buckets is None:
-        n_buckets = meta.get("n_buckets")
-    if n_buckets is None:
-        import pyarrow.compute as pc
-
-        man = ds_mod.dataset(paths.manifest).to_table(columns=["partition_id"])
-        n_buckets = int(pc.max(man["partition_id"]).as_py()) + 1
     return Index(
         paths=paths,
         docs=None,
@@ -1216,9 +1197,9 @@ def load_index_local(out_dir: str, n_buckets: int | None = None) -> Index:
         term_stats=None,
         n_docs=int(cs["n_docs"]),
         avg_doc_len=float(cs["avg_doc_len"]),
-        n_buckets=n_buckets,
+        n_buckets=n_buckets if n_buckets is not None else int(meta["n_buckets"]),
         max_doc_id=int(cs["max_doc_id"]),
-        n_doc_parts=meta.get("n_doc_parts"),
+        n_doc_parts=int(meta["n_doc_parts"]),
         meta=meta,
     )
 
@@ -1249,7 +1230,6 @@ def _done_buckets(spark: SparkSession, paths: IndexPaths) -> set[int]:
 
 def decode_postings(
     postings: DataFrame, with_tf: bool = False, extra_cols: tuple[str, ...] = (),
-    ids_codec: str = codec.VBYTE,
 ) -> DataFrame:
     """Decode block rows back to (term, doc_id, score[, tf][, extras]) via
     mapInPandas (Arrow-batched numpy; no per-row Python). ``extra_cols`` are
@@ -1274,7 +1254,7 @@ def decode_postings(
             terms = np.repeat(pdf["term"].to_numpy(), counts)
             ids = np.concatenate(
                 [
-                    codec.ids_decode(buf, int(n), int(mn), ids_codec)
+                    codec.ids_decode(buf, int(n), int(mn))
                     for buf, n, mn in zip(
                         pdf["doc_ids_delta_varbyte"], counts, pdf["min_doc_id"]
                     )
@@ -1287,7 +1267,7 @@ def decode_postings(
             if with_tf:
                 data["tf"] = np.concatenate(
                     [
-                        codec.tfs_decode(buf, int(n), ids_codec)
+                        codec.tfs_decode(buf, int(n))
                         for buf, n in zip(pdf["tfs_varbyte"], counts)
                     ]
                 )

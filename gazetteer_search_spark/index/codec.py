@@ -2,17 +2,28 @@
 
 The reference delegates the posting format to Lucene (ES text fields,
 /root/reference/src/main/resources/es_mappings/addr_row.json:41-52); this is
-our native replacement: docID delta encoding + 7-bit varbyte (VByte)
-compression in blocks of ``BLOCK_SIZE`` docs with per-block max-score
-metadata for block-max WAND pruning.
+our native replacement: docID delta encoding + FOR (frame-of-reference)
+fixed-width bit packing in blocks of ``BLOCK_SIZE`` docs, with per-block
+max-score metadata for block-max WAND pruning. It is the one posting format
+(index_meta ``postings_codec: "for"``, index format 0.8); the parquet
+column names ``doc_ids_delta_varbyte`` / ``tfs_varbyte`` predate it and are
+kept because renaming them would change the format.
 
-Encoding convention: little-endian 7-bit groups, continuation bit (0x80) set
-on every byte except the last of each value. Within a block the first docID
-is stored as a delta against the block's ``min_doc_id`` metadata (so each
-block is independently decodable), subsequent docIDs as gaps.
+Within a block the first docID is stored as a delta against the block's
+``min_doc_id`` metadata (so each block is independently decodable),
+subsequent docIDs as gaps.
+
+FOR layout: 1 header byte w = bit_length(max value) (0 = all values zero,
+no payload), then every value's low w bits, little-endian bit order
+(``np.packbits`` bitorder="little"). Decode is a handful of whole-array
+shifts against a cached gather plan. Within-block deltas are near-uniform
+after docID clustering, so one width per block wastes little. Exceptions
+(Lucene's patching in PFor) are unnecessary at block granularity: one
+outlier delta only widens its own 128-value block.
 
 All kernels operate on whole numpy arrays (used inside applyInPandas /
-mapInPandas over Arrow batches).
+mapInPandas over Arrow batches). Readers and writers call the public
+``ids_*`` / ``tfs_*`` / ``f64_*`` names.
 """
 
 from __future__ import annotations
@@ -21,94 +32,8 @@ import numpy as np
 
 BLOCK_SIZE = 128
 
-_U7 = np.uint64(7)
-_MASK7 = np.uint64(0x7F)
-
-
-def varbyte_encode(values: np.ndarray) -> bytes:
-    """Encode a non-negative int array as VByte. Vectorized."""
-    v = np.asarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b""
-    nb = np.ones(v.size, dtype=np.int64)
-    rest = v >> _U7
-    while rest.any():
-        nb += (rest > 0).astype(np.int64)
-        rest >>= _U7
-    ends = np.cumsum(nb)
-    starts = ends - nb
-    out = np.zeros(int(ends[-1]), dtype=np.uint8)
-    for k in range(int(nb.max())):
-        mask = nb > k
-        pos = starts[mask] + k
-        byte = ((v[mask] >> np.uint64(7 * k)) & _MASK7).astype(np.uint8)
-        cont = np.where(k < nb[mask] - 1, np.uint8(0x80), np.uint8(0))
-        out[pos] = byte | cont
-    return out.tobytes()
-
-
-def varbyte_decode(buf: bytes, n: int) -> np.ndarray:
-    """Decode ``n`` values from a VByte buffer. Vectorized."""
-    if n == 0:
-        return np.zeros(0, dtype=np.int64)
-    b = np.frombuffer(buf, dtype=np.uint8)
-    is_last = (b & 0x80) == 0
-    group = np.zeros(b.size, dtype=np.int64)
-    group[1:] = np.cumsum(is_last)[:-1]
-    idx = np.arange(b.size, dtype=np.int64)
-    changes = np.flatnonzero(np.diff(group)) + 1
-    firsts = np.concatenate(([0], changes))
-    pos = idx - firsts[group]
-    vals = np.zeros(n, dtype=np.uint64)
-    contrib = (b & np.uint8(0x7F)).astype(np.uint64) << (pos.astype(np.uint64) * _U7)
-    np.bitwise_or.at(vals, group, contrib)
-    return vals.astype(np.int64)
-
-
-def delta_varbyte_encode(sorted_ids: np.ndarray, base: int) -> bytes:
-    """Delta-encode a sorted id array against ``base`` (block min_doc_id),
-    then VByte."""
-    ids = np.asarray(sorted_ids, dtype=np.int64)
-    deltas = np.empty(ids.size, dtype=np.int64)
-    if ids.size:
-        deltas[0] = ids[0] - base
-        np.subtract(ids[1:], ids[:-1], out=deltas[1:])
-    return varbyte_encode(deltas)
-
-
-def delta_varbyte_decode(buf: bytes, n: int, base: int) -> np.ndarray:
-    if n == 0:
-        return np.zeros(0, dtype=np.int64)
-    deltas = varbyte_decode(buf, n)
-    deltas[0] += base
-    return np.cumsum(deltas)
-
-
-def f64_encode(values: np.ndarray) -> bytes:
-    return np.asarray(values, dtype=np.float64).tobytes()
-
-
-def f64_decode(buf: bytes, n: int) -> np.ndarray:
-    return np.frombuffer(buf, dtype=np.float64, count=n)
-
-
-# ---------------------------------------------------------------------------
-# FOR (frame-of-reference) fixed-width bit packing — the PForDelta family's
-# dense core. Every value of a block packs at ONE width w = bit_length(max),
-# so decode is a handful of whole-array shifts against a cached gather plan
-# instead of VByte's per-byte scatter (np.bitwise_or.at is an unbuffered
-# ufunc — measured ~3.7x slower per 128-doc block). Within-block deltas are
-# near-uniform after docID clustering, so the fixed width wastes little vs
-# VByte's per-value sizing and typically lands ~30% SMALLER (no continuation
-# bits). Layout: 1 header byte w (0 = all values zero, no payload), then the
-# values' low w bits each, little-endian bit order (np.packbits bitorder
-# ="little"). Exceptions (Lucene's patching in PFor) are unnecessary at
-# block granularity: one outlier delta only widens its own 128-value block.
-# ---------------------------------------------------------------------------
-
-VBYTE = "vbyte"
+# index_meta.json "postings_codec" value of the one supported format
 FOR = "for"
-CODECS = (VBYTE, FOR)
 
 # (n, w) -> (word_idx, bit_off, hi_shift, hi_is_zero, mask) unpack plan.
 # Bounded: n <= BLOCK_SIZE tail sizes actually seen, w <= 64.
@@ -188,27 +113,27 @@ def delta_for_decode(buf: bytes, n: int, base: int) -> np.ndarray:
     return np.cumsum(deltas)
 
 
-# ---- codec dispatch (index_meta.json "postings_codec"; absent = vbyte) ----
-
-def ids_encode(sorted_ids: np.ndarray, base: int, codec: str = VBYTE) -> bytes:
-    if codec == FOR:
-        return delta_for_encode(sorted_ids, base)
-    return delta_varbyte_encode(sorted_ids, base)
+def f64_encode(values: np.ndarray) -> bytes:
+    return np.asarray(values, dtype=np.float64).tobytes()
 
 
-def ids_decode(buf: bytes, n: int, base: int, codec: str = VBYTE) -> np.ndarray:
-    if codec == FOR:
-        return delta_for_decode(buf, n, base)
-    return delta_varbyte_decode(buf, n, base)
+def f64_decode(buf: bytes, n: int) -> np.ndarray:
+    return np.frombuffer(buf, dtype=np.float64, count=n)
 
 
-def tfs_encode(tfs: np.ndarray, codec: str = VBYTE) -> bytes:
-    if codec == FOR:
-        return for_encode(tfs)
-    return varbyte_encode(tfs)
+# ---- the public block-payload names readers and writers call ------------
+
+def ids_encode(sorted_ids: np.ndarray, base: int) -> bytes:
+    return delta_for_encode(sorted_ids, base)
 
 
-def tfs_decode(buf: bytes, n: int, codec: str = VBYTE) -> np.ndarray:
-    if codec == FOR:
-        return for_decode(buf, n)
-    return varbyte_decode(buf, n)
+def ids_decode(buf: bytes, n: int, base: int) -> np.ndarray:
+    return delta_for_decode(buf, n, base)
+
+
+def tfs_encode(tfs: np.ndarray) -> bytes:
+    return for_encode(tfs)
+
+
+def tfs_decode(buf: bytes, n: int) -> np.ndarray:
+    return for_decode(buf, n)

@@ -8,10 +8,10 @@ stop scheduling distributed work for data that fits one pandas frame:
     the batch is an in-memory Arrow table (``POST /bulk`` builds one; a
     DataFrame batch is collected once, its only Spark job). The row-level
     derivations that need Catalyst — doc_id hash, content_sha256, the
-    name-key SQL expression, native tokens — are one projection over
+    name-key SQL expression — are one projection over
     ``spark.createDataFrame(table)``, which the optimizer evaluates on the
-    driver (zero jobs); pandas tokens come from ``tokenize_pandas`` on the
-    driver (segments._derive_batch). Statistics, frozen-stats BM25 scoring,
+    driver (zero jobs); tokens come from ``tokenize_pandas`` on the driver
+    (segments._derive_batch). Statistics, frozen-stats BM25 scoring,
     salting, block packing and every parquet write then happen driver-side
     with numpy/pyarrow (this module).
 
@@ -131,7 +131,6 @@ def build_segment_index_local(
     attr_dict: tuple[list, bool] | None = None,
     positions: bool = False,
     store_content: bool = False,
-    postings_codec: str = "for",
 ) -> int:
     """Write a complete segment index at ``out_dir`` from a COLLECTED batch.
 
@@ -189,7 +188,7 @@ def build_segment_index_local(
         "name_key_sql": name_key_sql,
         "analyzer_hash": rules_set.content_hash(),
         "built_by": "localbuild",
-        "postings_codec": postings_codec,
+        "postings_codec": codec.FOR,
     }
     if attr_dim is not None and attr_dim in pdf.columns:
         meta.update(
@@ -461,7 +460,6 @@ def build_segment_index_local(
                     g["doc_id"].to_numpy(), g["tf"].to_numpy(),
                     g["score"].to_numpy(),
                     g["attr_id"].to_numpy() if use_attr else None,
-                    ids_codec=postings_codec,
                 )
         n_postings = sum(r[3] for r in rows)
         n_bytes = sum(r[10] for r in rows)

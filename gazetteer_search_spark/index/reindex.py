@@ -21,7 +21,7 @@ surface for this engine:
   index from a built one;
 - settings default to INHERIT from the source's ``index_meta.json`` /
   persisted analyzer rules, each individually overridable (new analyzer
-  rules, codec, bucket count, attr dim, clustering, positions) — the
+  rules, bucket count, attr dim, clustering, positions) — the
   "create the target with new settings" half of ES `_reindex`;
 - ``where`` is an optional SQL predicate over the stored doc columns (ES
   `_reindex` body ``"query"``), letting a slice of the corpus fork into
@@ -78,14 +78,12 @@ def reindex(
     out_dir: str,
     *,
     where: str | None = None,
-    tokenizer: str = "pandas",
     n_buckets=_INHERIT,
     postings_per_group: int = 1 << 20,
     analyzer_rules=_INHERIT,
     attr_dim=_INHERIT,
     cluster_by=_INHERIT,
     positions=_INHERIT,
-    postings_codec=_INHERIT,
     name_key=_INHERIT,
     store_content: bool = True,
     extra_fields: dict[str, str] | None = None,
@@ -93,7 +91,11 @@ def reindex(
     """Rebuild ``src_dir``'s live documents into a fresh index at
     ``out_dir``. Keyword settings default to the source index's own
     configuration; pass a value (including ``None`` where meaningful, e.g.
-    ``attr_dim=None`` / ``cluster_by=None``) to change it."""
+    ``attr_dim=None`` / ``cluster_by=None``) to change it.
+
+    The source's postings are never read, only its docs and tombstones, so
+    this is also the migration path for a store_content index older than
+    the one supported on-disk format (0.8): the target is written in it."""
     meta_path = os.path.join(src_dir, "index_meta.json")
     with open(meta_path) as f:
         meta = json.load(f)
@@ -120,8 +122,6 @@ def reindex(
         cluster_by = tuple(cb) if cb else None
     if positions is _INHERIT:
         positions = bool(meta.get("positions"))
-    if postings_codec is _INHERIT:
-        postings_codec = meta.get("postings_codec")
     if name_key is _INHERIT:
         name_key = meta.get("name_key_sql")
     if analyzer_rules is _INHERIT:
@@ -138,14 +138,12 @@ def reindex(
         spark,
         corpus,
         out_dir,
-        tokenizer=tokenizer,
         n_buckets=n_buckets,
         postings_per_group=postings_per_group,
         analyzer_rules=analyzer_rules,
         attr_dim=attr_dim,
         cluster_by=cluster_by,
         positions=bool(positions),
-        postings_codec=postings_codec,
         name_key=name_key,
         store_content=store_content,
         extra_fields=extra_fields,

@@ -45,6 +45,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gazetteer_search_spark.analyzer.config import load_index_rules
 from gazetteer_search_spark.index import builder as b
 from gazetteer_search_spark.index.builder import (
     FrozenStats,
@@ -149,14 +150,6 @@ def _gen_entries(index_dir: str) -> list[tuple[int, str]]:
     ]
 
 
-def _base_rules(index_dir: str):
-    """The base index's persisted analyzer rule set (None for pre-0.6 bases
-    — build_index then persists the defaults, which IS what built them)."""
-    from gazetteer_search_spark.analyzer.config import load_index_rules
-
-    return load_index_rules(index_dir)
-
-
 #: Serving-tier doc bound: bases up to this many docs take the Spark-free
 #: micro-batch forms of add_segment (local build) and delete_by_keys
 #: (pyarrow key resolution); larger bases keep the distributed forms.
@@ -204,7 +197,6 @@ def add_segment(
     key_cols: tuple[str, ...] = ("repo", "path"),
     n_buckets: int = 8,
     postings_per_group: int = 1 << 20,
-    tokenizer: str = "pandas",
     extra_fields: dict[str, str] | None = None,
     local_threshold: int = 5000,
 ) -> Index:
@@ -240,8 +232,8 @@ def add_segment(
     # the base's persisted name-key SQL keys this segment's name_ordinal the
     # SAME way (ADVICE r3: a custom-keyed base must not get default-keyed
     # segments — distinct=True would then collapse by a different key per
-    # generation)
-    base_meta = b.read_index_meta(index_dir)
+    # generation); a pre-0.8 base is refused before anything is written
+    base_meta = b.read_current_meta(index_dir)
     # field mapping + base metadata via pyarrow/json — no Spark work before
     # the local/distributed routing decision (micro-batch cadence pays this
     # preamble per segment)
@@ -265,7 +257,7 @@ def add_segment(
             return _add_segment_local(
                 spark, table, index_dir, seg_dir, seg_id,
                 key_cols=key_cols, n_buckets=n_buckets,
-                postings_per_group=postings_per_group, tokenizer=tokenizer,
+                postings_per_group=postings_per_group,
                 extra_fields=extra_fields or None, base_meta=base_meta,
             )
 
@@ -279,7 +271,6 @@ def add_segment(
         spark,
         corpus,
         seg_dir,
-        tokenizer=tokenizer,
         n_buckets=n_buckets,
         postings_per_group=postings_per_group,
         extra_fields=extra_fields or None,
@@ -288,7 +279,7 @@ def add_segment(
         # segments analyze with the base's rule set too (the persisted
         # analyzer_rules.json travels generation-to-generation, so a
         # multi-generation index stays analyzer-uniform)
-        analyzer_rules=_base_rules(index_dir),
+        analyzer_rules=load_index_rules(index_dir),
         # ...and inherit the base's attribute dictionary (no per-micro-batch
         # dictionary job; uniform bit assignments). overflow=True: the batch
         # may carry values the base never saw — they land on the overflow
@@ -310,10 +301,6 @@ def add_segment(
         # ...and a store_content base keeps stored content (serving
         # snippets hydrate segment-resident winners too)
         store_content=bool(base_meta.get("stored_content")),
-        # one payload codec per multi-generation index (pre-0.8 base =
-        # vbyte): readers dispatch per generation, but uniformity keeps
-        # compaction/promote byte-comparable with fresh builds
-        postings_codec=base_meta.get("postings_codec", "vbyte"),
     )
 
     # tombstones: older docs sharing an upsert key with this batch. One
@@ -360,26 +347,21 @@ def _derive_batch(
     *,
     clustered: bool,
     name_key: str,
-    tokenizer: str,
     field_map: dict[str, str],
     stored_content: bool,
 ):
     """A micro-batch's row-level derivations, as the pandas frame
     ``build_segment_index_local`` consumes: doc_id (:func:`_doc_id_col`),
-    content_sha256, the base's name-key SQL and, for
-    ``tokenizer="native"``, the token lists are ONE Catalyst projection
+    content_sha256 and the base's name-key SQL are ONE Catalyst projection
     over ``spark.createDataFrame(table)``. The optimizer folds a projection
     over a LocalRelation into the relation, so the collect evaluates on the
     driver and schedules ZERO Spark jobs — Spark's own semantics, nothing
-    reimplemented. ``tokenizer="pandas"`` calls the kernel that
-    ``tokens_pandas_udf`` wraps (``tokenize_pandas``) on the driver."""
+    reimplemented. The token lists come from the kernel that
+    ``tokens_pandas_udf`` wraps (``tokenize_pandas``), on the driver."""
     import pandas as pd
 
     from gazetteer_search_spark.analyzer.tokenizer import tokenize_pandas
-    from gazetteer_search_spark.search import bm25
 
-    if tokenizer not in ("pandas", "native"):
-        raise ValueError(f"unknown tokenizer {tokenizer!r}")
     # token column -> source column (content, then one per mapped field)
     tok_src = {
         "tokens": "content",
@@ -394,16 +376,10 @@ def _derive_batch(
         *(["content"] if stored_content else []),
         F.expr(name_key).cast("string").alias("_nk"),
     ]
-    if tokenizer == "native":
-        sel += [
-            bm25.tokens_col(F.col(src), "native").alias(name)
-            for name, src in tok_src.items()
-        ]
     df = spark.createDataFrame(table).select(*sel)
     pdf = pd.DataFrame(df.collect(), columns=df.columns)
-    if tokenizer == "pandas":
-        for name, src in tok_src.items():
-            pdf[name] = tokenize_pandas(table.column(src).to_pandas()).tolist()
+    for name, src in tok_src.items():
+        pdf[name] = tokenize_pandas(table.column(src).to_pandas()).tolist()
     return pdf
 
 
@@ -459,7 +435,6 @@ def _add_segment_local(
     key_cols: tuple[str, ...],
     n_buckets: int,
     postings_per_group: int,
-    tokenizer: str,
     extra_fields: dict[str, str] | None,
     base_meta: dict,
 ) -> Index:
@@ -488,7 +463,7 @@ def _add_segment_local(
     pdf = _derive_batch(
         spark, table,
         clustered=bool(base_meta.get("clustered_by")),
-        name_key=name_key, tokenizer=tokenizer, field_map=extra_fields,
+        name_key=name_key, field_map=extra_fields,
         stored_content=bool(base_meta.get("stored_content")),
     )
 
@@ -520,7 +495,7 @@ def _add_segment_local(
         n_buckets=n_buckets,
         postings_per_group=postings_per_group,
         name_key_sql=name_key,
-        analyzer_rules=_base_rules(index_dir),
+        analyzer_rules=load_index_rules(index_dir),
         attr_dim=base_meta.get("attr_dim"),
         attr_dict=(
             (base_meta["attr_values"], True)
@@ -529,7 +504,6 @@ def _add_segment_local(
         ),
         positions=bool(base_meta.get("positions")),
         store_content=bool(base_meta.get("stored_content")),
-        postings_codec=base_meta.get("postings_codec", "vbyte"),
     )
 
     # tombstones: every older doc sharing an upsert key with the batch
@@ -974,7 +948,9 @@ def open_multi_search(
         idx = load_index(spark, index_dir)
     else:
         idx = load_index_local(index_dir)
-    eng = SearchEngine(spark, idx, serving=True)
+    # serving=False: the engine's own LocalExecutor (a postings-tree
+    # discovery) would be replaced by the MultiExecutor at once
+    eng = SearchEngine(spark, idx, serving=False)
     eng._local = ex
     return eng
 
@@ -1224,9 +1200,9 @@ def _live_docs_and_tf(spark: SparkSession, index_dir: str):
         paths = IndexPaths(gdir)
         newer = [t for sid, t in tomb_dfs if sid > gid]
         docs_g = spark.read.parquet(paths.docs)
+        b.read_current_meta(gdir)
         post_g = decode_postings(
             spark.read.parquet(paths.postings), with_tf=True,
-            ids_codec=b.read_index_meta(gdir).get("postings_codec", "vbyte"),
         ).filter(~F.col("term").contains(":"))
         for t in newer:
             docs_g = docs_g.join(t, "doc_id", "left_anti")
@@ -1248,7 +1224,6 @@ def compact(
     out_dir: str,
     n_buckets: int | None = None,
     postings_per_group: int = 1 << 20,
-    tokenizer: str = "pandas",
 ) -> Index:
     """Merge every generation into one EXACT index at ``out_dir`` — from the
     index files alone, no source table: live docs keep their stored columns
@@ -1297,7 +1272,6 @@ def compact(
         spark,
         None,
         out_dir,
-        tokenizer=tokenizer,
         n_buckets=n_buckets,
         postings_per_group=postings_per_group,
         extra_fields=extra_fields,
@@ -1305,14 +1279,12 @@ def compact(
         # compaction re-derives the global name_ordinal under the SAME key
         # definition the base was built with (ADVICE r3)
         name_key=base_meta.get("name_key_sql"),
-        analyzer_rules=_base_rules(index_dir),
+        analyzer_rules=load_index_rules(index_dir),
         # ...and the SAME declared attribute dimension: the build_index
         # default ('lang') must not replace a custom/disabled dimension
         # after a compaction (ADVICE r4). The dictionary itself is
         # recomputed exactly — that part is deliberate.
         attr_dim=base_meta.get("attr_dim"),
-        # ...and the SAME posting-block codec (pre-0.8 base = vbyte)
-        postings_codec=base_meta.get("postings_codec", "vbyte"),
     )
     if base_meta.get("positions"):
         _compact_positions(spark, index_dir, idx, n_buckets)
@@ -1455,7 +1427,6 @@ def auto_compact(
     policy: CompactionPolicy,
     n_buckets: int | None = None,
     postings_per_group: int = 1 << 20,
-    tokenizer: str = "pandas",
 ) -> str | None:
     """Compact + promote in place when ``policy`` says so. Returns the
     trigger reason (compaction ran) or None (nothing due). The compacted
@@ -1467,7 +1438,7 @@ def auto_compact(
     tmp = index_dir.rstrip("/") + f".compacting-{uuid.uuid4().hex[:8]}"
     compact(
         spark, index_dir, tmp, n_buckets=n_buckets,
-        postings_per_group=postings_per_group, tokenizer=tokenizer,
+        postings_per_group=postings_per_group,
     )
     promote(index_dir, tmp, keep_backup=policy.keep_backup)
     return reason
@@ -1536,7 +1507,6 @@ def flush_spool(
         auto_compact(
             spark, index_dir, policy,
             n_buckets=segment_kwargs.get("n_buckets"),
-            tokenizer=segment_kwargs.get("tokenizer", "pandas"),
         )
     return n
 
@@ -1591,7 +1561,6 @@ def stream_ingest(
             auto_compact(
                 spark, index_dir, policy,
                 n_buckets=segment_kwargs.get("n_buckets"),
-                tokenizer=segment_kwargs.get("tokenizer", "pandas"),
             )
 
     return (

@@ -58,7 +58,7 @@ from gazetteer_search_spark.index import codec
 from gazetteer_search_spark.index.builder import (
     IndexPaths,
     attr_bit_value,
-    read_index_meta,
+    read_current_meta,
     term_bucket_py,
 )
 
@@ -75,7 +75,7 @@ _KERNEL_SCHEMA = T.StructType(
 )
 
 
-def _make_block_kernel(ids_codec: str, n_buckets: int):
+def _make_block_kernel(n_buckets: int):
     """Per-block structural checks; emits one row per block with the
     decoded doc_count / sum(tf) (for the term_stats cross-check) and the
     FIRST failed invariant (None when the block is clean)."""
@@ -94,10 +94,9 @@ def _make_block_kernel(ids_codec: str, n_buckets: int):
                 sum_tf = 0
                 try:
                     ids = codec.ids_decode(
-                        row.doc_ids_delta_varbyte, n, int(row.min_doc_id),
-                        ids_codec,
+                        row.doc_ids_delta_varbyte, n, int(row.min_doc_id)
                     )
-                    tfs = codec.tfs_decode(row.tfs_varbyte, n, ids_codec)
+                    tfs = codec.tfs_decode(row.tfs_varbyte, n)
                     scores = codec.f64_decode(row.scores_f64, n)
                     if len(ids) != n or len(tfs) != n or len(scores) != n:
                         err = "payload length != doc_count"
@@ -170,16 +169,15 @@ def _verify_generation(
 ) -> None:
     """Run every single-generation check over one index root; mutates
     ``report`` (per-generation entry + global error roll-up)."""
-    meta = read_index_meta(root)
+    meta = read_current_meta(root)
     paths = IndexPaths(root)
-    ids_codec = meta.get("postings_codec", codec.VBYTE)
     n_buckets = int(meta["n_buckets"])
     gen: dict = {"root": root, "errors": []}
 
     # ---- block kernel over postings -----------------------------------
     postings = spark.read.parquet(paths.postings)
     kern = postings.mapInPandas(
-        _make_block_kernel(ids_codec, n_buckets), schema=_KERNEL_SCHEMA
+        _make_block_kernel(n_buckets), schema=_KERNEL_SCHEMA
     ).persist()
     n_blocks = kern.count()  # materializes the persist
     bad_blocks, samples = _err_summary(

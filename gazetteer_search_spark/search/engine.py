@@ -571,7 +571,6 @@ class SearchEngine:
         # drifted synonyms/stops — raise instead.
         from gazetteer_search_spark.analyzer import config as _acfg
 
-        persisted = _acfg.load_index_rules(index.paths.root)
         if analyzer_rules is not None:
             rules_set = _acfg.resolve_rules(analyzer_rules)
             want = index.meta.get("analyzer_hash")
@@ -584,9 +583,7 @@ class SearchEngine:
                 )
             self.rules = rules_set
         else:
-            # pre-0.6 index (no persisted rules file) = built with the
-            # defaults — exactly what DEFAULT_RULES is
-            self.rules = persisted if persisted is not None else _acfg.DEFAULT_RULES
+            self.rules = _acfg.load_index_rules(index.paths.root)
         self._local = None
         # spark=None is the Spark-FREE serving form (index from
         # load_index_local): no JVM on the node, every query must route
@@ -719,11 +716,7 @@ class SearchEngine:
         pruned = self.index.postings.filter(
             F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
         )
-        if (
-            options is not None
-            and options.lang
-            and "attr_bits" in self.index.postings.columns
-        ):
+        if options is not None and options.lang:
             # block-level attribute pruning: only the filter lang's blocks
             # (plus overflow) are decoded — wrong-lang docs would be dropped
             # by the downstream docs-join filter anyway, so skipping their
@@ -746,7 +739,7 @@ class SearchEngine:
                     (F.col("max_doc_id") >= rr[0])
                     & (F.col("min_doc_id") <= rr[1])
                 )
-        return decode_postings(pruned, ids_codec=self.index.ids_codec)
+        return decode_postings(pruned)
 
     def match_set(
         self,
@@ -1052,8 +1045,7 @@ class SearchEngine:
                 [], "term string, fg_count long, bg_count long, score double"
             )
         decoded = decode_postings(
-            self.index.postings.filter(~F.col("term").contains(":")),
-            ids_codec=self.index.ids_codec,
+            self.index.postings.filter(~F.col("term").contains(":"))
         )
         fg = (
             decoded.join(m, "doc_id", "left_semi")

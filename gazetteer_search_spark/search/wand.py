@@ -154,7 +154,6 @@ def make_range_kernel(
     decode_cache=None,
     attr_keep_id: int | None = None,
     allowed_range: tuple[int, int] | None = None,
-    ids_codec: str = codec.VBYTE,
     deadline: float | None = None,
 ):
     """Build the applyInPandas kernel (closure over broadcast-size query
@@ -182,7 +181,7 @@ def make_range_kernel(
 
     ``decode_cache`` (serving path): a MutableMapping[(term, block_id) ->
     (ids, scores)] holding RAW (unweighted, unclipped) block decodes — a
-    repeated query's hot blocks skip the varbyte/f64 decode entirely (the
+    repeated query's hot blocks skip the FOR/f64 decode entirely (the
     caller owns sizing/eviction; masks and weights still apply per call, so
     cached entries are query-independent). None on the distributed path
     (task-lifetime kernels have no repeats to amortize).
@@ -319,7 +318,7 @@ def make_range_kernel(
                 ids, sc = cached
             else:
                 buf, sbuf = bufs[int(i)]
-                ids = codec.ids_decode(buf, int(cnts[i]), int(mns[i]), ids_codec)
+                ids = codec.ids_decode(buf, int(cnts[i]), int(mns[i]))
                 sc = codec.f64_decode(sbuf, int(cnts[i]))
                 if decode_cache is not None:
                     decode_cache[keys[int(i)]] = (ids, sc)
@@ -473,7 +472,7 @@ def make_range_kernel(
                     pair = _block_pair(g, bi)
                     _prefetch([pair])  # no-op when a batch already pulled it
                     buf, sbuf = _payload_cache[pair]
-                ids = codec.ids_decode(buf, n, int(m["mns_raw"][bi]), ids_codec)
+                ids = codec.ids_decode(buf, n, int(m["mns_raw"][bi]))
                 sc = np.asarray(codec.f64_decode(sbuf, n))
                 if decode_cache is not None:
                     decode_cache[_block_pair(g, bi)] = (ids, sc)
@@ -751,7 +750,7 @@ def wand_topk(
     attr_cond = None
     attr_keep_id = None
     lang_handled = False
-    if options.lang and "attr_bits" in index.postings.columns:
+    if options.lang:
         am = index.attr_filter_mask("lang", options.lang)
         if am is not None:
             mask, aid = am
@@ -885,7 +884,7 @@ def wand_topk(
                     (F.col("max_doc_id") >= allowed_range[0])
                     & (F.col("min_doc_id") <= allowed_range[1])
                 )
-            star = decode_postings(star_blocks, ids_codec=index.ids_codec)
+            star = decode_postings(star_blocks)
             if allowed_range is not None:
                 # straddling blocks decode out-of-range postings — same
                 # filtered-universe requirement as the block filter above
@@ -1016,7 +1015,6 @@ def wand_topk(
         and ((not has_doc_side) or allowed_bc is not None),
         counters=counters, initial_theta=initial_theta, allowed_ids=allowed_bc,
         attr_keep_id=attr_keep_id, allowed_range=allowed_range,
-        ids_codec=index.ids_codec,
     )
     per_doc = blocks.groupBy("range_id").applyInPandas(kernel, schema=PER_DOC_SCHEMA)
     return finalize_ranked(per_doc, eff_msm, k, index.docs, options)

@@ -332,6 +332,19 @@ def _not_param_terms(words) -> tuple[str, ...]:
     return terms
 
 
+def _filter_opts(default_opts, qs):
+    """A match-set route's filters: lang / repo / path_prefix (an absent
+    param keeps the serving default, where a filtered alias puts its scope)
+    and not=WORD exclusions — the same filters /search applies."""
+    return replace(
+        default_opts,
+        lang=(qs.get("lang") or [default_opts.lang])[0],
+        repo=(qs.get("repo") or [default_opts.repo])[0],
+        path_prefix=(qs.get("path_prefix") or [default_opts.path_prefix])[0],
+        exclude_terms=_not_param_terms(qs.get("not")),
+    )
+
+
 def _make_handler(
     engine, default_opts, auth=None, cors_origin=None, index_path=None,
     alias_path=None, reopen=None, federated=None, access_log=None,
@@ -1014,13 +1027,7 @@ def _make_handler(
                 self._send(400, {"error": "missing q"})
                 return
             try:
-                opts = replace(
-                    default_opts,
-                    lang=(qs.get("lang") or [default_opts.lang])[0],
-                    repo=(qs.get("repo") or [default_opts.repo])[0],
-                    path_prefix=(qs.get("path_prefix") or [default_opts.path_prefix])[0],
-                    exclude_terms=_not_param_terms(qs.get("not")),
-                )
+                opts = _filter_opts(default_opts, qs)
                 n = None
                 with lock:  # sends happen AFTER release (send-after-release rule)
                     _rows, meta = engine._search_ladder(q, opts)
@@ -1057,11 +1064,7 @@ def _make_handler(
             av = (qs.get("after_value") or [None])[0]
             after = (af, av) if af is not None and av is not None else None
             try:
-                opts = replace(
-                    default_opts,
-                    lang=(qs.get("lang") or [default_opts.lang])[0],
-                    repo=(qs.get("repo") or [default_opts.repo])[0],
-                )
+                opts = _filter_opts(default_opts, qs)
                 rows = None
                 with lock:  # sends happen AFTER release
                     _rows, meta = engine._search_ladder(q, opts)
@@ -1100,11 +1103,7 @@ def _make_handler(
             key = (qs.get("key") or ["lang"])[0]
             n = int((qs.get("n") or ["3"])[0])
             try:
-                opts = replace(
-                    default_opts,
-                    lang=(qs.get("lang") or [default_opts.lang])[0],
-                    repo=(qs.get("repo") or [default_opts.repo])[0],
-                )
+                opts = _filter_opts(default_opts, qs)
                 rows = None
                 with lock:  # sends happen AFTER release
                     _rows, meta = engine._search_ladder(q, opts)
@@ -1139,11 +1138,7 @@ def _make_handler(
             key = (qs.get("key") or ["lang"])[0]
             metric = (qs.get("metric") or ["repo"])[0]
             try:
-                opts = replace(
-                    default_opts,
-                    lang=(qs.get("lang") or [default_opts.lang])[0],
-                    repo=(qs.get("repo") or [default_opts.repo])[0],
-                )
+                opts = _filter_opts(default_opts, qs)
                 rows = None
                 with lock:  # sends happen AFTER release
                     _rows, meta = engine._search_ladder(q, opts)
@@ -1188,11 +1183,7 @@ def _make_handler(
                 mdc = max(
                     1, int((qs.get("min_doc_count") or ["2"])[0])
                 )
-                opts = replace(
-                    default_opts,
-                    lang=(qs.get("lang") or [default_opts.lang])[0],
-                    repo=(qs.get("repo") or [default_opts.repo])[0],
-                )
+                opts = _filter_opts(default_opts, qs)
                 rows = None
                 with lock:  # sends happen AFTER release
                     _rows, meta = engine._search_ladder(q, opts)
@@ -1235,11 +1226,7 @@ def _make_handler(
                 mdc = max(
                     1, int((qs.get("min_doc_count") or ["2"])[0])
                 )
-                opts = replace(
-                    default_opts,
-                    lang=(qs.get("lang") or [default_opts.lang])[0],
-                    repo=(qs.get("repo") or [default_opts.repo])[0],
-                )
+                opts = _filter_opts(default_opts, qs)
                 rows = None
                 with lock:  # sends happen AFTER release
                     _rows, meta = engine._search_ladder(q, opts)
@@ -1281,11 +1268,7 @@ def _make_handler(
                 return
             try:
                 doc_id = int(did)
-                opts = replace(
-                    default_opts,
-                    lang=(qs.get("lang") or [default_opts.lang])[0],
-                    repo=(qs.get("repo") or [default_opts.repo])[0],
-                )
+                opts = _filter_opts(default_opts, qs)
                 out = None
                 with lock:  # sends happen AFTER release
                     found = doc_id in engine.get_docs(

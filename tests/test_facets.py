@@ -346,6 +346,18 @@ def test_http_composite_and_tophits(local_eng):
             for b in th["buckets"][v]
         ]
         assert got_th == [(v, rk, d) for v, rk, d, _ in want_th]
+
+        # /composite filters its match set by path_prefix exactly as
+        # /count does (the prefix keeps one package of thirteen)
+        def _get(path):
+            with urllib.request.urlopen(f"{base}{path}") as r:
+                return json.loads(r.read())
+
+        pre = "&path_prefix=src/pkg3/"
+        n_pre = _get(f"/count?q=postings{pre}")["count"]
+        assert 0 < n_pre < _get("/count?q=postings")["count"]
+        comp = _get(f"/composite?q=postings&key=lang&size=100{pre}")
+        assert sum(b["doc_count"] for b in comp["buckets"]) == n_pre
     finally:
         srv.shutdown()
 

@@ -53,7 +53,7 @@ def test_field_bm25_uses_field_stats(spark, index):
     from gazetteer_search_spark import BM25_B, BM25_K1
 
     rows = (
-        decode_postings(index.postings.filter(F.col("term") == "name:src"), with_tf=True, ids_codec=index.ids_codec)
+        decode_postings(index.postings.filter(F.col("term") == "name:src"), with_tf=True)
         .collect()
     )
     favg = spark.read.parquet(index.paths.root + "/field_stats").collect()[0].avg_len
@@ -75,7 +75,7 @@ def test_cross_field_boost_rank_identity(spark, index):
     """Engine cross-field dis_max == driver-recomputed max(5*name, 1*content)."""
     terms = ["name:merge", "merge"]
     dec = (
-        decode_postings(index.postings.filter(F.col("term").isin(terms)), ids_codec=index.ids_codec)
+        decode_postings(index.postings.filter(F.col("term").isin(terms)))
         .toPandas()
     )
     w = {"name:merge": 5.0, "merge": 1.0}

@@ -29,7 +29,7 @@ def index(spark, corpus, tmp_path_factory):
 
 
 def test_postings_roundtrip_matches_direct(spark, corpus, index):
-    decoded = builder.decode_postings(index.postings, with_tf=True, ids_codec=index.ids_codec)
+    decoded = builder.decode_postings(index.postings, with_tf=True)
     direct = bm25.term_freqs(bm25.doc_table(corpus, "pandas")).select(
         "term", "doc_id", "tf"
     )
@@ -99,7 +99,7 @@ def test_manifest_metrics(spark, index):
         assert r.docs > 0 and r.bytes > 0 and r.merge_fan_in >= 1
         assert r.started is not None and r.finished is not None
     total_postings = sum(r.postings for r in m)
-    assert total_postings == builder.decode_postings(index.postings, ids_codec=index.ids_codec).count()
+    assert total_postings == builder.decode_postings(index.postings).count()
 
 
 def test_term_stats_consistency(spark, corpus, index):
@@ -213,54 +213,28 @@ def test_build_from_catalog_table(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS gss_corpus_t")
 
 
-def test_codec_cross_identity_and_inheritance(spark, corpus, index, tmp_path):
-    """The posting codec is a layout choice, never a semantics one: a VByte
-    build of the same corpus yields the identical decoded posting multiset
-    and identical top-k (Spark + serving), FOR payloads are smaller, and a
-    resumed build / segment generation inherits the base codec."""
-    from gazetteer_search_spark.search.engine import SearchEngine, SearchOptions
+def test_resume_over_pre08_out_dir_raises(spark, corpus, index, tmp_path):
+    """A resumed build never mixes formats: an out_dir holding a pre-0.8
+    index (meta without the FOR codec) is refused before anything is
+    written."""
+    import shutil
 
-    assert index.ids_codec == "for"  # 0.8 default
-    vb_dir = str(tmp_path / "vb")
-    vb = builder.build_index(
-        spark, corpus, vb_dir, n_buckets=N_BUCKETS, postings_per_group=64,
-        postings_codec="vbyte",
-    )
-    assert vb.ids_codec == "vbyte"
-    dec = lambda ix: sorted(
-        (r.term, r.doc_id, r.tf, round(r.score, 12))
-        for r in builder.decode_postings(
-            ix.postings, with_tf=True, ids_codec=ix.ids_codec
-        ).collect()
-    )
-    assert dec(index) == dec(vb)
-    # payload bytes: FOR strictly smaller in aggregate
-    size = lambda ix: ix.postings.agg(F.sum("block_bytes")).collect()[0][0]
-    assert size(index) < size(vb)
-    # rank identity both tiers (Spark path and Spark-free serving path)
-    from gazetteer_search_spark.search.engine import TermGroup
-
-    groups = [
-        TermGroup(0, ("merge",), True, 1.0),
-        TermGroup(1, ("sort",), True, 1.0),
-    ]
-
-    def _page(ix, serving):
-        eng = SearchEngine(None if serving else spark, ix, serving=serving)
-        if serving:
-            rows = eng.search_rung_rows(groups, 1, SearchOptions(k=15))
-        else:
-            rows = eng.search_rung(groups, 1, SearchOptions(k=15)).collect()
-        return sorted(
-            ((r.doc_id, round(r.score, 9)) for r in rows),
-            key=lambda t: (-t[1], t[0]),
-        )
-
-    for serving in (False, True):
-        assert _page(index, serving) == _page(vb, serving)
-    # resume cannot silently flip the codec
-    with pytest.raises(ValueError, match="postings_codec"):
+    legacy = str(tmp_path / "legacy")
+    shutil.copytree(index.paths.root, legacy)
+    meta = builder.read_index_meta(legacy)
+    del meta["postings_codec"]
+    builder._write_index_meta(legacy, meta)
+    with pytest.raises(ValueError, match="pre-0.8 index"):
         builder.build_index(
-            spark, corpus, vb_dir, n_buckets=N_BUCKETS,
-            postings_per_group=64, postings_codec="for",
+            spark, corpus, legacy, n_buckets=N_BUCKETS, postings_per_group=64
+        )
+    assert builder.read_index_meta(legacy) == meta
+
+
+def test_build_index_accepts_only_the_pandas_tokenizer(spark, corpus, tmp_path):
+    """The query side analyzes with the code-aware kernel, so an index
+    built with any other tokenizer could not be matched."""
+    with pytest.raises(ValueError, match="tokenizer 'native'"):
+        builder.build_index(
+            spark, corpus, str(tmp_path / "nat"), tokenizer="native"
         )

@@ -44,7 +44,7 @@ def _batch(corpus0, lo, hi, tag, extra="localmarker"):
     )
 
 
-def _twin_roots(spark, base, tmp_path_factory, batch, **kw):
+def _twin_roots(spark, base, tmp_path_factory, batch):
     """One copy of the base per segment route: the local micro-batch build
     fed the DataFrame, the same rows as an in-memory Arrow table (the
     ``POST /bulk`` form), and the distributed build."""
@@ -58,7 +58,7 @@ def _twin_roots(spark, base, tmp_path_factory, batch, **kw):
         root = str(tmp_path_factory.mktemp(f"lb_{mode}") / "idx")
         shutil.copytree(root0, root)
         segments.add_segment(
-            spark, src, root, n_buckets=4, local_threshold=thr, **kw
+            spark, src, root, n_buckets=4, local_threshold=thr
         )
         roots[mode] = root
     return roots
@@ -68,14 +68,6 @@ def _twin_roots(spark, base, tmp_path_factory, batch, **kw):
 def twins(spark, base, tmp_path_factory):
     batch = _batch(base[1], 0, 60, "v2")
     return _twin_roots(spark, base, tmp_path_factory, batch)
-
-
-@pytest.fixture(scope="module")
-def native_twins(spark, base, tmp_path_factory):
-    batch = _batch(base[1], 60, 100, "vnat", "nativemarker")
-    return _twin_roots(
-        spark, base, tmp_path_factory, batch, tokenizer="native"
-    )
 
 
 def _seg(root):
@@ -106,7 +98,7 @@ def test_local_marker_and_routing(twins):
         assert meta["name_key_sql"] == "repo"  # the base's custom key
 
 
-@pytest.mark.parametrize("fixture", ["twins", "native_twins"])
+@pytest.mark.parametrize("fixture", ["twins"])
 def test_in_memory_batch_segment_byte_identical(request, fixture):
     """An Arrow-table batch derives exactly what the collected DataFrame
     batch does: the segments match file for file, byte for byte."""
@@ -132,9 +124,6 @@ def _postings(spark, root):
     dec = decode_postings(
         spark.read.parquet(builder.IndexPaths(_seg(root)).postings),
         with_tf=True,
-        ids_codec=builder.read_index_meta(_seg(root)).get(
-            "postings_codec", "vbyte"
-        ),
     ).collect()
     return sorted((r.term, r.doc_id, r.tf, round(r.score, 12)) for r in dec)
 
@@ -150,15 +139,6 @@ def test_postings_decode_identical(spark, twins):
     got = {mode: _postings(spark, root) for mode, root in twins.items()}
     assert got["local"] == got["table"] == got["spark"]
     assert any(t.startswith("name:") for t, *_ in got["local"])  # field postings
-
-
-def test_native_tokenizer_twins_identical(spark, native_twins):
-    """tokenizer="native" folds into the same driver-evaluated projection;
-    all three routes still write the same docs and postings."""
-    for read in (_docs_rows, _postings):
-        got = {mode: read(spark, root) for mode, root in native_twins.items()}
-        assert got["local"] == got["table"] == got["spark"]
-    assert any(t == "nativemarker" for t, *_ in got["local"])
 
 
 def test_attr_blocks_identical(spark, twins):

@@ -70,6 +70,38 @@ def test_reindex_same_settings_is_equivalent(spark, src, tmp_path):
         assert _hits(spark, idx2, terms) == _hits(spark, idx, terms), terms
 
 
+def test_pre08_index_is_refused_and_reindex_migrates_it(spark, src, tmp_path):
+    """One on-disk format: every reader of postings refuses an index whose
+    meta does not record the FOR codec, naming the way out; reindex, which
+    reads only docs and tombstones, migrates it to an index that answers
+    exactly like the original."""
+    import shutil
+
+    from gazetteer_search_spark.index.verify import verify_index
+
+    root, idx = src
+    legacy = str(tmp_path / "legacy")
+    shutil.copytree(root, legacy)
+    meta = builder.read_index_meta(legacy)
+    del meta["postings_codec"]
+    builder._write_index_meta(legacy, meta)
+
+    for open_it in (
+        lambda: builder.load_index(spark, legacy),
+        lambda: builder.load_index_local(legacy),
+        lambda: segments.open_multi_search(legacy),
+        lambda: verify_index(spark, legacy),
+    ):
+        with pytest.raises(ValueError, match="pre-0.8 index.*reindex"):
+            open_it()
+
+    out = str(tmp_path / "migrated")
+    idx2 = reindex(spark, legacy, out)
+    assert builder.read_index_meta(out)["postings_codec"] == "for"
+    for terms in (["merge"], ["merge", "postings"], ["readbuffersize"]):
+        assert _hits(spark, idx2, terms) == _hits(spark, idx, terms), terms
+
+
 def test_reindex_with_new_analyzer_rules(spark, src, tmp_path):
     root, idx = src
     out = str(tmp_path / "rules")

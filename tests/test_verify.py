@@ -247,14 +247,13 @@ def test_cli_verify_index_exit_codes(spark, clean_idx, tmp_path, capsys):
     assert rep["ok"] is False
 
 
-def test_clean_vbyte_minimal_layout_verifies_ok(spark, tmp_path):
+def test_clean_minimal_layout_verifies_ok(spark, tmp_path):
     """Layout matrix: the verifier holds on the OTHER config corner too —
-    vbyte codec, no attribute dimension, no clustering, no positions, no
-    stored content (sha check skipped and reported as such)."""
-    root = str(tmp_path / "vb")
+    no attribute dimension, no clustering, no positions, no stored content
+    (sha check skipped and reported as such)."""
+    root = str(tmp_path / "minimal")
     builder.build_index(
-        spark, _corpus(spark, 250), root, n_buckets=2,
-        postings_codec="vbyte", attr_dim=None,
+        spark, _corpus(spark, 250), root, n_buckets=2, attr_dim=None,
     )
     rep = verify_index(spark, root)
     assert rep["ok"], rep
