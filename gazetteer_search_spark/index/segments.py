@@ -19,7 +19,8 @@ index layout:
   pruning — a dead doc never enters a candidate list or the theta
   threshold). A live doc exists in exactly one generation, so the
   coordinator merge is plain hit-list interleaving, the same argument that
-  makes doc-range sharding exact.
+  makes doc-range sharding exact, and the generations' match sets
+  concatenate into one match set that every aggregation reads once.
 - ``compact`` rebuilds ONE exact-statistics index from the index files
   alone — no source-table access: the token multiset of every live doc is
   reconstructed from decoded postings (tf is persisted per posting), field
@@ -54,6 +55,11 @@ from gazetteer_search_spark.index.builder import (
     decode_postings,
     load_index,
     load_index_local,
+)
+from gazetteer_search_spark.search.fastpath import (
+    LocalExecutor,
+    MatchSetExecutor,
+    _path_proximity_np,
 )
 
 SEGMENTS_DIR = "segments"
@@ -546,22 +552,16 @@ def _tombstones_local(seg_path: str) -> np.ndarray:
     return np.sort(t["doc_id"].to_numpy().astype(np.int64))
 
 
-class _InvStr(str):
-    """Inverted string ordering for descending field-sort merges."""
-
-    def __lt__(self, other):  # noqa: D105
-        return str.__gt__(self, other)
-
-
-class MultiExecutor:
+class MultiExecutor(MatchSetExecutor):
     """Serving executor over a multi-generation index: one (lazy)
-    LocalExecutor per generation, each masking the union of all NEWER
-    generations' tombstones at decode, merged by plain hit interleaving —
-    every live doc exists in exactly one generation, so per-generation
-    top-k lists merge exactly (the doc-range-sharding argument). Implements
-    the LocalExecutor surface the engine routes through (search_rung and
-    the other scored operations); dictionary operations are the engine's
-    TermDict, which loads every generation listed in ``subs``.
+    LocalExecutor per generation in ``subs``, each masking the union of all
+    NEWER generations' tombstones at decode. Every live doc exists in
+    exactly one generation, so the generations' match sets concatenate
+    into the index's match set — the count, facets, composite,
+    cardinality, top_hits, field sort and explain of MatchSetExecutor run
+    once over it — and per-generation top-k lists merge exactly by plain
+    hit interleaving (the doc-range-sharding argument). Dictionary
+    operations are the engine's TermDict, which loads every generation.
 
     Scoping note: ``SearchOptions.distinct`` collapses duplicate names
     WITHIN each generation (name_ordinal is computed per import batch) —
@@ -570,8 +570,6 @@ class MultiExecutor:
     compaction re-derives a global ordinal."""
 
     def __init__(self, index_dir: str, lazy_payloads: bool = True):
-        from gazetteer_search_spark.search.fastpath import LocalExecutor
-
         segs = list_segments(index_dir)
         tombs = [
             (int(s["seg_id"]), _tombstones_local(s["path"])) for s in segs
@@ -596,21 +594,21 @@ class MultiExecutor:
             )
         self.index = self.subs[0].index  # base-gen handle (engine metadata)
 
+    @property
+    def executors(self) -> list[LocalExecutor]:
+        return self.subs
+
     @staticmethod
     def _merge(hit_lists: list[list], options) -> list:
-        from gazetteer_search_spark.search.fastpath import _path_proximity_np
-
         near = getattr(options, "near_path", None)
         allh = [h for hl in hit_lists for h in hl]
         if near is not None:
-            import numpy as _np
-
             allh.sort(
                 key=lambda h: (
                     -round(h.score, 9),
                     -int(
                         _path_proximity_np(
-                            _np.array([h.path], dtype=object), near
+                            np.array([h.path], dtype=object), near
                         )[0]
                     ),
                     h.doc_id,
@@ -619,6 +617,17 @@ class MultiExecutor:
         else:
             allh.sort(key=lambda h: (-round(h.score, 9), h.doc_id))
         return allh[: options.k]
+
+    def match_columns(self, groups, msm: int, options, cols) -> dict:
+        """The generations' match sets concatenated (each doc_id-ascending)
+        — disjoint, since tombstones mask every superseded copy."""
+        parts = [s.match_columns(groups, msm, options, cols) for s in self.subs]
+        return {c: np.concatenate([p[c] for p in parts]) for c in cols}
+
+    def ranked_hits(self, groups, msm: int, options) -> list:
+        return self._merge(
+            [s.ranked_hits(groups, msm, options) for s in self.subs], options
+        )
 
     def search_rung(self, groups, msm: int, options) -> list:
         return self._merge(
@@ -640,126 +649,6 @@ class MultiExecutor:
             options,
         )
 
-    def search_sorted_rows(
-        self, groups, msm: int, options, by: str = "path",
-        ascending: bool = True, after: tuple | None = None,
-    ) -> list[tuple]:
-        """Field sort across generations: every generation returns its own
-        keyset-filtered top-k page (live docs only — tombstones are masked
-        at decode), and the disjoint pages merge by (value, doc_id) with
-        one final k-cut."""
-        col_idx = {"doc_id": 0, "repo": 1, "path": 2, "lang": 3}[by]
-        merged: list[tuple] = []
-        for s in self.subs:
-            merged += s.search_sorted_rows(
-                groups, msm, options, by=by, ascending=ascending,
-                after=after,
-            )
-        merged.sort(
-            key=lambda r: (r[col_idx], r[0])
-            if ascending
-            else (_InvStr(r[col_idx]) if isinstance(r[col_idx], str)
-                  else -r[col_idx], r[0])
-        )
-        return merged[: int(getattr(options, "k", 10))]
-
-    def facet_rows(
-        self, groups, msm: int, options, keys=("lang",), size: int = 10,
-        min_doc_count: int = 1,
-    ) -> list[tuple]:
-        """Facets across generations: every live doc exists in exactly ONE
-        generation (tombstones masked at decode), so per-generation bucket
-        counts are disjoint and sum exactly; the bucket order/size cut
-        applies to the merged counts."""
-        agg: dict[tuple[str, str], int] = {}
-        for s in self.subs:
-            # per-generation buckets uncut (size = all): the cut must apply
-            # AFTER the merge or a value inside one generation's top-N but
-            # outside another's would undercount
-            for f, v, c in s.facet_rows(
-                groups, msm, options, keys, size=1 << 62, min_doc_count=1
-            ):
-                agg[(f, v)] = agg.get((f, v), 0) + int(c)
-        out: list[tuple] = []
-        for key in keys:
-            buckets = sorted(
-                (
-                    (v, c)
-                    for (f, v), c in agg.items()
-                    if f == key and c >= min_doc_count
-                ),
-                key=lambda b: (-b[1], b[0]),
-            )
-            out.extend((key, v, c) for v, c in buckets[:size])
-        return out
-
-    def match_count(self, groups, msm: int, options) -> int:
-        """Exact match count across generations: live docs are disjoint
-        (tombstones masked at decode), so per-generation counts sum."""
-        return sum(s.match_count(groups, msm, options) for s in self.subs)
-
-    def cardinality_rows(
-        self, groups, msm: int, options, key: str = "lang",
-        metric: str = "repo",
-    ) -> list[tuple]:
-        """Cardinality sub-agg across generations: live docs are disjoint
-        (tombstones masked at decode) so per-bucket doc counts SUM, but a
-        metric value present in several generations must count ONCE — the
-        distinct (bucket, metric) pair sets union before counting."""
-        from gazetteer_search_spark.search.fastpath import (
-            rows_from_cardinality_parts,
-        )
-
-        counts: dict[str, int] = {}
-        pairs: set[tuple[str, str]] = set()
-        for s in self.subs:
-            c, p = s.cardinality_parts(groups, msm, options, key, metric)
-            for k, n in c.items():
-                counts[k] = counts.get(k, 0) + int(n)
-            pairs |= p
-        return rows_from_cardinality_parts(counts, pairs)
-
-    def composite_rows(
-        self, groups, msm: int, options, keys=("lang",), size: int = 10,
-        after=None,
-    ) -> list[tuple]:
-        """Composite-agg paging across generations: disjoint per-generation
-        counts sum per (facet, value); the key order + after-cursor + page
-        cut apply to the MERGED buckets (per-generation pages can't be
-        cut early — a bucket past one generation's page boundary could
-        merge into an earlier key position)."""
-        agg: dict[tuple[str, str], int] = {}
-        for s in self.subs:
-            for f, v, c in s.composite_rows(
-                groups, msm, options, keys, size=1 << 62, after=None
-            ):
-                agg[(f, v)] = agg.get((f, v), 0) + int(c)
-        out = sorted((f, v, c) for (f, v), c in agg.items())
-        if after is not None:
-            af, av = after
-            out = [b for b in out if (b[0], b[1]) > (af, av)]
-        return out[:size]
-
-    def top_hits_rows(
-        self, groups, msm: int, options, key: str = "lang", n: int = 3
-    ) -> list[tuple]:
-        """top_hits across generations: per-generation uncut bucket pages
-        interleave by the rank key (disjoint live docs), then the running
-        top-n per bucket — the same merge-then-cut rule as facet_rows."""
-        rows: list[tuple] = []
-        for s in self.subs:
-            rows.extend(s.top_hits_rows(groups, msm, options, key, n=1 << 62))
-        # global rank order inside each bucket: (value, score desc, doc_id)
-        rows.sort(key=lambda r: (r[0], -round(r[3], 9), r[2]))
-        out: list[tuple] = []
-        counts: dict[str, int] = {}
-        for v, _rk, d, sc in rows:
-            c = counts.get(v, 0)
-            if c < n:
-                counts[v] = c + 1
-                out.append((v, c + 1, d, sc))
-        return out
-
     def explain_hits(self, ids, groups) -> list[tuple]:
         """Per-hit explanation across generations: every live doc exists in
         exactly ONE generation (tombstone masks kill superseded copies at
@@ -777,10 +666,6 @@ class MultiExecutor:
         for s in self.subs:
             out.update(s.group_max_scores(ids, groups))
         return out
-
-    def explain_rung(self, groups, msm: int, options) -> list[tuple]:
-        hits = self.search_rung(groups, msm, options)
-        return self.explain_hits([h.doc_id for h in hits], groups)
 
 
 def open_docs_pruned(ds_mod, docs_root: str, ids: list[int], npart):

@@ -39,6 +39,7 @@ from pyspark.sql import types as T
 from gazetteer_search_spark.analyzer.query_ir import Query, analyze_query
 from gazetteer_search_spark.index.builder import Index, decode_postings, term_bucket_py
 from gazetteer_search_spark.search import bm25
+from gazetteer_search_spark.search.fastpath import SORT_FIELDS, check_agg_keys
 from gazetteer_search_spark.search.termdict import TermDict
 
 # matched_mask is a 63-bit clause bitmask (bit 63 is the int64 sign bit: the
@@ -468,10 +469,7 @@ def finalize_ranked(
         gated = gated.withColumn("score", F.col("score") * boost)
     coll = getattr(options, "collapse", None)
     if coll:
-        if coll not in ("repo", "path", "lang"):
-            raise ValueError(
-                f"collapse: unknown key {coll!r} (allowed: repo, path, lang)"
-            )
+        check_agg_keys("collapse", (coll,))
         from pyspark.sql import Window as _W
 
         # keep each key's best doc by the rank key; one window shuffle keyed
@@ -606,15 +604,26 @@ class SearchEngine:
         self._termdict: TermDict | None = None
 
     @property
+    def _generations(self) -> list[Index]:
+        """The Index handle of every generation this engine answers from:
+        the serving executor's, else the one index."""
+        if self._local is None:
+            return [self.index]
+        return self._local.generations
+
+    def _max_doc(self) -> int:
+        """Docs across every generation, superseded copies included — the
+        universe the summed df counts (Lucene's maxDoc), so df <= n."""
+        return sum(g.n_docs for g in self._generations)
+
+    @property
     def termdict(self) -> TermDict:
-        """The dictionary over every generation this engine answers from (a
-        multi-generation executor lists them in ``subs``), df summed per
-        term."""
+        """The dictionary over every generation this engine answers from,
+        df summed per term."""
         if self._termdict is None:
-            gens = [s.index for s in getattr(self._local, "subs", [])] or [
-                self.index
-            ]
-            self._termdict = TermDict([g.paths.term_stats for g in gens])
+            self._termdict = TermDict(
+                [g.paths.term_stats for g in self._generations]
+            )
         return self._termdict
 
     # ---- expansions ---------------------------------------------------------
@@ -807,10 +816,9 @@ class SearchEngine:
         match set (not the page), per facet key. Output (facet, value,
         doc_count); buckets per facet ordered (doc_count desc, value asc),
         nulls excluded, exactly the tag_stats/terms-agg contract scoped to
-        the query. Spark shape: ONE pass — the match set's key columns
-        explode into (facet, value) pairs, one hash aggregation, one
-        windowed cut; serving engines answer from the numpy twin
-        (fastpath.facet_rows)."""
+        the query. Spark shape: ONE pass — the bucket count of
+        :meth:`_bucket_counts`, then one windowed cut; serving engines
+        answer from the numpy twin (fastpath.facet_rows)."""
         from pyspark.sql import Window as _W
 
         options = options or SearchOptions()
@@ -819,27 +827,32 @@ class SearchEngine:
                 groups, msm, options, keys, size, min_doc_count
             )
             return self.spark.createDataFrame(rows, FACET_SCHEMA)
-        m = self.match_set(groups, msm, options)
-        pairs: list[F.Column] = []
-        for k in keys:
-            if k not in m.columns:
-                raise ValueError(
-                    f"unknown facet key {k!r}; available: "
-                    f"{[c for c in m.columns if c != 'doc_id']}"
-                )
-            pairs += [F.lit(k), F.col(k).cast("string")]
         w = _W.partitionBy("facet").orderBy(
             F.col("doc_count").desc(), F.col("value").asc()
         )
         return (
-            m.select(F.explode(F.create_map(*pairs)).alias("facet", "value"))
-            .filter(F.col("value").isNotNull())
-            .groupBy("facet", "value")
-            .agg(F.count("*").alias("doc_count"))
+            self._bucket_counts("facet", groups, msm, options, keys)
             .filter(F.col("doc_count") >= F.lit(min_doc_count))
             .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") <= F.lit(size))
             .drop("_rn")
+        )
+
+    def _bucket_counts(
+        self, what: str, groups: list[TermGroup], msm: int,
+        options: SearchOptions, keys: tuple[str, ...],
+    ) -> DataFrame:
+        """(facet, value, doc_count) over the match set, nulls excluded:
+        the match set's key columns explode into (facet, value) pairs and
+        one hash aggregation counts them."""
+        check_agg_keys(what, keys)
+        pairs = [c for k in keys for c in (F.lit(k), F.col(k).cast("string"))]
+        return (
+            self.match_set(groups, msm, options)
+            .select(F.explode(F.create_map(*pairs)).alias("facet", "value"))
+            .filter(F.col("value").isNotNull())
+            .groupBy("facet", "value")
+            .agg(F.count("*").alias("doc_count"))
         )
 
     def composite_buckets(
@@ -859,7 +872,7 @@ class SearchEngine:
         so any number of buckets streams out in fixed-size pages with no
         coordinator-side giant sort buffer. Output (facet, value, doc_count).
 
-        Scale shape: one hash aggregation over the exploded key map (same
+        Scale shape: the bucket count of :meth:`_bucket_counts` (same
         single pass as ``facets``), then a key-range filter the aggregation's
         own partitioning serves — no window, no global re-sort beyond the
         k-bounded page TakeOrdered."""
@@ -869,21 +882,7 @@ class SearchEngine:
                 groups, msm, options, keys, size, after
             )
             return self.spark.createDataFrame(rows, FACET_SCHEMA)
-        m = self.match_set(groups, msm, options)
-        pairs: list[F.Column] = []
-        for k in keys:
-            if k not in m.columns:
-                raise ValueError(
-                    f"unknown facet key {k!r}; available: "
-                    f"{[c for c in m.columns if c != 'doc_id']}"
-                )
-            pairs += [F.lit(k), F.col(k).cast("string")]
-        b = (
-            m.select(F.explode(F.create_map(*pairs)).alias("facet", "value"))
-            .filter(F.col("value").isNotNull())
-            .groupBy("facet", "value")
-            .agg(F.count("*").alias("doc_count"))
-        )
+        b = self._bucket_counts("composite", groups, msm, options, keys)
         if after is not None:
             af, av = after
             b = b.filter(
@@ -919,10 +918,7 @@ class SearchEngine:
         if self._local is not None and self.spark is not None:
             rows = self._local.top_hits_rows(groups, msm, options, key, n)
             return self.spark.createDataFrame(rows, TOP_HITS_SCHEMA)
-        if key not in ("repo", "path", "lang"):
-            raise ValueError(
-                f"top_hits: unknown key {key!r} (allowed: repo, path, lang)"
-            )
+        check_agg_keys("top_hits", (key,))
         s = self.scored_matches(groups, msm, options)
         w = _W.partitionBy(key).orderBy(
             F.round(F.col("score"), 9).desc(), F.col("doc_id").asc()
@@ -962,21 +958,16 @@ class SearchEngine:
         ``exact=False`` is the HLL++ sketch (approx_count_distinct) —
         constant per-bucket memory, mergeable partials, the 100-TB default
         exactly as in ES. Serving nodes answer from the numpy twin
-        (fastpath.cardinality_rows), multi-generation via disjoint count
-        sums + distinct-pair unions (segments.cardinality_rows)."""
+        (fastpath.cardinality_rows) over one match set, which for a
+        multi-generation index holds every generation's live docs."""
         options = options or SearchOptions()
         if self._local is not None and self.spark is not None:
             rows = self._local.cardinality_rows(
                 groups, msm, options, key, metric
             )
             return self.spark.createDataFrame(rows, CARDINALITY_SCHEMA)
+        check_agg_keys("cardinality", (key, metric))
         m = self.match_set(groups, msm, options)
-        for c in (key, metric):
-            if c not in m.columns:
-                raise ValueError(
-                    f"unknown column {c!r}; available: "
-                    f"{[x for x in m.columns if x != 'doc_id']}"
-                )
         agg = (
             F.count_distinct(F.col(metric))
             if exact
@@ -1133,7 +1124,7 @@ class SearchEngine:
             for t in set(tokenize_text(content.get(int(r.doc_id), ""))):
                 fg[t] = fg.get(t, 0) + 1
         dfm = self._df_for_terms(sorted(fg))
-        n = float(self.index.n_docs)
+        n = float(self._max_doc())
         scored: list[tuple[str, int, int, float]] = []
         for t, c in fg.items():
             if c < int(min_doc_count):
@@ -1408,7 +1399,7 @@ class SearchEngine:
         for t in tokenize_text(text):
             tf[t] = tf.get(t, 0) + 1
         dfm = self._df_for_terms(sorted(tf))
-        n = self.index.n_docs
+        n = self._max_doc()
         ranked = []
         for t, f in tf.items():
             df = dfm.get(t, 0)
@@ -1690,7 +1681,7 @@ class SearchEngine:
                 ]
             else:
                 cands_by_tok[t] = [(t, 0)]
-        n = float(self.index.n_docs)
+        n = float(self._max_doc())
         out: dict[str, float] = {}
         for combo in itertools.product(*[cands_by_tok[t] for t in toks]):
             phrase = " ".join(c for c, _ in combo)
@@ -1948,11 +1939,7 @@ class SearchEngine:
                 )
             if getattr(options, "collapse", None):
                 coll = options.collapse
-                if coll not in ("repo", "path", "lang"):
-                    raise ValueError(
-                        f"collapse: unknown key {coll!r} "
-                        "(allowed: repo, path, lang)"
-                    )
+                check_agg_keys("collapse", (coll,))
                 from pyspark.sql import Window as _W
 
                 # scores are constant — the per-key best is the lowest
@@ -2087,17 +2074,15 @@ class SearchEngine:
         # _phrase_rung's verify loop
         import numpy as np
 
-        idxs = [s.index for s in getattr(self._local, "subs", [])] or [
-            self.index
-        ]
         allowed = np.unique(
             np.concatenate(
-                [_ph.local_phrase_ids(ix, terms, slop) for ix in idxs]
+                [
+                    _ph.local_phrase_ids(ix, terms, slop)
+                    for ix in self._generations
+                ]
             )
         )
         return self._local.search_allowed(groups, len(groups), options, allowed)
-
-    _SORT_FIELDS = ("repo", "path", "lang", "doc_id")
 
     def search_sorted(
         self,
@@ -2121,9 +2106,9 @@ class SearchEngine:
         unconditional tiebreak, so pages are gap-and-dup-free under any
         field-value ties."""
         options = options or SearchOptions()
-        if by not in self._SORT_FIELDS:
+        if by not in SORT_FIELDS:
             raise ValueError(
-                f"search_sorted: by must be one of {self._SORT_FIELDS}, "
+                f"search_sorted: by must be one of {SORT_FIELDS}, "
                 f"got {by!r}"
             )
         if self._local is not None:
@@ -2170,14 +2155,11 @@ class SearchEngine:
         options = options or SearchOptions()
         groups = [TermGroup(group_id=0, terms=(term,), required=True)]
         if self._local is not None:
-            idxs = [
-                s.index for s in getattr(self._local, "subs", [])
-            ] or [self.index]
             allowed = np.unique(
                 np.concatenate(
                     [
                         _ph.local_span_first_ids(ix, term, end)
-                        for ix in idxs
+                        for ix in self._generations
                     ]
                 )
             )
@@ -2370,14 +2352,11 @@ class SearchEngine:
             TermGroup(group_id=i, terms=(t,), required=True)
             for i, t in enumerate(uniq)
         ]
-        idxs = [
-            s.index for s in getattr(self._local, "subs", [])
-        ] or [self.index]
         allowed = np.unique(
             np.concatenate(
                 [
                     _ph.local_unordered_near_ids(ix, uniq, window)
-                    for ix in idxs
+                    for ix in self._generations
                 ]
             )
         )
@@ -2504,9 +2483,7 @@ class SearchEngine:
             if not verify:
                 rows = self.search_rung_rows(groups, msm, options)
             else:
-                idxs = [
-                    s.index for s in getattr(self._local, "subs", [])
-                ] or [self.index]
+                idxs = self._generations
                 allowed = None
                 for slots, slop in verify:
                     try:
@@ -2689,14 +2666,10 @@ class SearchEngine:
         """Cumulative serving-tier block counters summed across shards /
         generations (zeros on a Spark-only engine) — the profile API's
         before/after basis."""
-        execs = []
-        if self._local is not None:
-            execs = list(getattr(self._local, "subs", [])) or [self._local]
+        execs = self._local.executors if self._local is not None else []
         out = {"decoded": 0, "skipped": 0, "attr_gated": 0, "range_gated": 0}
         for e in execs:
-            c = getattr(e, "counters", None)
-            if c is None:
-                continue
+            c = e.counters
             out["decoded"] += c.decoded.value
             out["skipped"] += c.skipped.value
             out["attr_gated"] += c.attr_gated.value
@@ -2709,17 +2682,10 @@ class SearchEngine:
         ``terminated_early`` (terminate_after cut the collection). Summed
         across shards/generations like _counter_snapshot; always False on a
         Spark-only engine (the budgets are serving-tier semantics)."""
-        execs = []
-        if self._local is not None:
-            execs = list(getattr(self._local, "subs", [])) or [self._local]
+        execs = self._local.executors if self._local is not None else []
         return {
-            "timed_out": any(
-                bool(getattr(getattr(e, "counters", None), "timed_out", False))
-                for e in execs
-            ),
-            "terminated_early": any(
-                bool(getattr(e, "last_terminated_early", False)) for e in execs
-            ),
+            "timed_out": any(e.counters.timed_out for e in execs),
+            "terminated_early": any(e.last_terminated_early for e in execs),
         }
 
     def search_response(

@@ -17,6 +17,13 @@ queries without launching a single Spark job:
 - scoring: identical math to the DataFrame engine — per-group dis_max with
   per-term (cross-field) weights, score sum, msm gate, matched-clause mask,
   doc-side filters/boosts, round(score,9)/doc_id deterministic rank.
+- aggregations: count, facets, composite, cardinality, top_hits, field
+  sort and explain are written once, in ``MatchSetExecutor``, over one
+  match set — every gated, doc-filtered, tombstone-masked matching doc as
+  numpy columns. ``LocalExecutor`` produces it from one index;
+  ``segments.MultiExecutor`` concatenates its generations' match sets, so
+  a generation is only something to iterate over (Lucene's one collector
+  over every segment's live docs).
 
 The Spark path stays the batch/scale formulation over the same files; every
 query answered here is rank-identical to it (asserted in tests and by the
@@ -94,19 +101,20 @@ def _path_proximity_np(paths: np.ndarray, near: str) -> np.ndarray:
     return out
 
 
-def rows_from_cardinality_parts(
-    counts: dict, pairs: set
-) -> list[tuple]:
-    """(value, doc_count, n_distinct) value-ascending from cardinality
-    partials — shared by the single-index twin and the multi-generation
-    merge (segments.MultiExecutor.cardinality_rows)."""
-    ndist: dict[str, int] = {}
-    for k, _m in pairs:
-        ndist[k] = ndist.get(k, 0) + 1
-    return [
-        (k, int(c), int(ndist.get(k, 0)))
-        for k, c in sorted(counts.items())
-    ]
+#: The doc columns an aggregation, a top_hits bucket or a field collapse may
+#: key on, on both tiers; internal docs columns (doc_id, name_ordinal)
+#: never bucket. A field sort may also order by doc_id.
+AGG_KEYS = ("repo", "path", "lang")
+SORT_FIELDS = (*AGG_KEYS, "doc_id")
+
+
+def check_agg_keys(what: str, keys) -> None:
+    """Raise ValueError naming ``what`` unless every key is in AGG_KEYS."""
+    for k in keys:
+        if k not in AGG_KEYS:
+            raise ValueError(
+                f"{what}: unknown key {k!r} (allowed: {', '.join(AGG_KEYS)})"
+            )
 
 
 class DecodeCache(dict):
@@ -173,7 +181,163 @@ class LocalCounters:
         self.timed_out = False
 
 
-class LocalExecutor:
+class MatchSetExecutor:
+    """The serving match-set features, written once for every executor.
+
+    A subclass supplies the match set (:meth:`match_columns`: every gated,
+    doc-filtered, tombstone-masked matching doc as numpy columns), the
+    uncut ranked hits (:meth:`ranked_hits`), the scored primitives
+    (``search_rung``, ``search_allowed``, ``explain_hits``,
+    ``group_max_scores``) and ``executors``: the single-index executors it
+    answers from. Rows are identical to the Spark twins in engine.py
+    (match_set semantics: >= msm distinct REQUIRED clauses, then doc-side
+    filters)."""
+
+    @property
+    def generations(self) -> list[Index]:
+        """The Index handle of every executor, base generation first."""
+        return [e.index for e in self.executors]
+
+    def match_count(self, groups, msm: int, options) -> int:
+        """Exact match count (ES _count / track_total_hits=true analog):
+        the full match-set size with zero ranking work — no scores, no
+        sort, no hydration."""
+        cols = self.match_columns(groups, msm, options, ("doc_id",))
+        return int(cols["doc_id"].size)
+
+    def search_sorted_rows(
+        self, groups, msm: int, options, by: str = "path",
+        ascending: bool = True, after: tuple | None = None,
+    ) -> list[tuple]:
+        """Serving-tier field sort + keyset paging (the Lucene doc-values
+        sort): the sort field comes from the match set's columns, the
+        keyset predicate is one vector comparison, doc_id ascending breaks
+        ties. Rows: (doc_id, repo, path, lang) — identical to the Spark
+        match_set formulation (pinned by test)."""
+        if by not in SORT_FIELDS:
+            raise ValueError(
+                f"search_sorted_rows: by must be one of {SORT_FIELDS}, "
+                f"got {by!r}"
+            )
+        cols = self.match_columns(groups, msm, options, SORT_FIELDS)
+        ids, vals = cols["doc_id"], cols[by]
+        if after is not None:
+            av, aid = after
+            beyond = (vals > av) if ascending else (vals < av)
+            keep = beyond | ((vals == av) & (ids > int(aid)))
+            cols = {c: a[keep] for c, a in cols.items()}
+            ids, vals = cols["doc_id"], cols[by]
+        top = (
+            pd.DataFrame({"v": vals, "i": ids})
+            .sort_values(
+                ["v", "i"], ascending=[ascending, True], kind="mergesort"
+            )
+            .head(int(getattr(options, "k", 10)))
+            .index
+        )
+        return [
+            (int(ids[j]), cols["repo"][j], cols["path"][j], cols["lang"][j])
+            for j in top
+        ]
+
+    def _value_counts(
+        self, what: str, groups, msm: int, options, keys
+    ) -> dict[str, pd.Series]:
+        """key -> value counts over the match set, nulls excluded: the one
+        bucket count behind facet_rows and composite_rows."""
+        check_agg_keys(what, keys)
+        cols = self.match_columns(groups, msm, options, keys)
+        return {k: pd.Series(cols[k]).value_counts(dropna=True) for k in keys}
+
+    def facet_rows(
+        self, groups, msm: int, options, keys=("lang",), size: int = 10,
+        min_doc_count: int = 1,
+    ) -> list[tuple]:
+        """ES terms-agg over the FULL match set, not the top-k page (the
+        aggs-on-query shape). Rows ``(facet, value, doc_count)``, buckets
+        per facet ordered (doc_count desc, value asc), nulls excluded — the
+        terms-agg contract tag_stats pins for the whole corpus, here scoped
+        to the query's matches. Serving twin of engine.facets."""
+        out: list[tuple] = []
+        counts = self._value_counts("facet", groups, msm, options, keys)
+        for key, vc in counts.items():
+            buckets = sorted(
+                ((str(v), int(c)) for v, c in vc.items() if c >= min_doc_count),
+                key=lambda b: (-b[1], b[0]),
+            )
+            out.extend((key, v, c) for v, c in buckets[:size])
+        return out
+
+    def composite_rows(
+        self, groups, msm: int, options, keys=("lang",), size: int = 10,
+        after: tuple[str, str] | None = None,
+    ) -> list[tuple]:
+        """ES composite-agg twin of engine.composite_buckets: buckets over
+        the full match set ordered by (facet asc, value asc), resumed
+        strictly after the ``after`` (facet, value) cursor, ``size`` per
+        page. Null keys excluded."""
+        out = sorted(
+            (key, str(v), int(c))
+            for key, vc in self._value_counts(
+                "composite", groups, msm, options, keys
+            ).items()
+            for v, c in vc.items()
+        )
+        if after is not None:
+            af, av = after
+            out = [b for b in out if (b[0], b[1]) > (af, av)]
+        return out[:size]
+
+    def cardinality_rows(
+        self, groups, msm: int, options, key: str = "lang",
+        metric: str = "repo",
+    ) -> list[tuple]:
+        """ES terms+cardinality twin of engine.facet_cardinality: (value,
+        doc_count, n_distinct) value-ascending over the full match set;
+        null keys make no bucket, null metric values don't count."""
+        check_agg_keys("cardinality", (key, metric))
+        cols = self.match_columns(groups, msm, options, (key, metric))
+        f = pd.DataFrame({"k": cols[key], "m": cols[metric]})
+        g = f[f["k"].notna()].groupby("k")["m"].agg(["size", "nunique"])
+        return [
+            (str(k), int(c), int(d))
+            for k, c, d in zip(g.index, g["size"], g["nunique"])
+        ]
+
+    def top_hits_rows(
+        self, groups, msm: int, options, key: str = "lang", n: int = 3
+    ) -> list[tuple]:
+        """ES top_hits-per-bucket twin of engine.top_hits: the ranked hits
+        UNCUT (k lifted to the corpus bound), then the running top-n per
+        bucket in rank order. Rows (value, bucket_rank, doc_id, score),
+        ordered (value asc, bucket_rank asc)."""
+        import dataclasses as _dc
+
+        check_agg_keys("top_hits", (key,))
+        uncut = _dc.replace(options, k=1 << 31, after=None)
+        buckets: dict[str, list] = {}
+        for h in self.ranked_hits(groups, msm, uncut):
+            v = getattr(h, key)
+            if v is None:
+                continue
+            lst = buckets.setdefault(str(v), [])
+            if len(lst) < n:
+                lst.append(h)
+        return [
+            (v, i + 1, int(h.doc_id), float(h.score))
+            for v in sorted(buckets)
+            for i, h in enumerate(buckets[v])
+        ]
+
+    def explain_rung(self, groups, msm: int, options) -> list[tuple]:
+        """Explain rows for the rung's top-k page (the ``explain=true``
+        search shape): run the ordinary rung, then explain_hits on the
+        winners."""
+        hits = self.search_rung(groups, msm, options)
+        return self.explain_hits([h.doc_id for h in hits], groups)
+
+
+class LocalExecutor(MatchSetExecutor):
     def __init__(
         self,
         index: Index,
@@ -246,6 +410,10 @@ class LocalExecutor:
         # skip the FOR/f64 decode entirely (query-independent — weights
         # and range/filter masks apply per call); trimmed between queries
         self.decoded_cache = DecodeCache()
+
+    @property
+    def executors(self) -> list[LocalExecutor]:
+        return [self]
 
     # ---- lazy caches ---------------------------------------------------------
     def _load_docs(self) -> dict:
@@ -742,7 +910,7 @@ class LocalExecutor:
     def _match_positions(self, groups, msm: int, options) -> np.ndarray:
         """Positions (into the sorted docs arrays) of EVERY matching doc —
         >= msm distinct REQUIRED clauses, then doc-side filters; the numpy
-        twin of engine.match_set. Shared by facet_rows and match_count."""
+        twin of engine.match_set, behind match_columns."""
         docs = self._load_docs()
         terms = sorted({t for g in groups for t in g.terms})
         if not terms:
@@ -798,188 +966,19 @@ class LocalExecutor:
             keep &= docs["name_ordinal"][pos] == 0
         return pos[keep]
 
-    def match_count(self, groups, msm: int, options) -> int:
-        """Exact match count (ES _count / track_total_hits=true analog):
-        the full match-set size with zero ranking work — no scores, no
-        sort, no hydration."""
-        return int(self._match_positions(groups, msm, options).size)
-
-    SORT_FIELDS = ("repo", "path", "lang", "doc_id")
-
-    def search_sorted_rows(
-        self, groups, msm: int, options, by: str = "path",
-        ascending: bool = True, after: tuple | None = None,
-    ) -> list[tuple]:
-        """Serving-tier field sort + keyset paging (the Lucene doc-values
-        sort): the match set's sort-field values come straight from the
-        cached docs arrays (_load_docs — loaded once, the doc-values
-        analog), the keyset predicate is one vector comparison, and only
-        k rows hydrate. Rows: (doc_id, repo, path, lang) — identical to
-        the Spark match_set formulation (pinned by test)."""
-        if by not in self.SORT_FIELDS:
-            raise ValueError(
-                f"search_sorted_rows: by must be one of "
-                f"{self.SORT_FIELDS}, got {by!r}"
-            )
+    def match_columns(self, groups, msm: int, options, cols) -> dict:
+        """The match set as numpy columns, doc_id-ascending: ``cols`` names
+        ``doc_id`` and docs columns; only those are gathered."""
         docs = self._load_docs()
         pos = self._match_positions(groups, msm, options)
-        ids = docs["ids"][pos]
-        vals = ids if by == "doc_id" else docs[by][pos]
-        if after is not None:
-            av, aid = after
-            if ascending:
-                keep = (vals > av) | ((vals == av) & (ids > int(aid)))
-            else:
-                keep = (vals < av) | ((vals == av) & (ids > int(aid)))
-            ids, vals = ids[keep], vals[keep]
-        frame = pd.DataFrame({"v": vals, "i": ids}).sort_values(
-            ["v", "i"], ascending=[ascending, True], kind="mergesort"
-        ).head(int(getattr(options, "k", 10)))
-        sel = np.searchsorted(docs["ids"], frame["i"].to_numpy())
-        return [
-            (
-                int(i),
-                docs["repo"][s],
-                docs["path"][s],
-                docs["lang"][s],
-            )
-            for i, s in zip(frame["i"].to_numpy(), sel)
-        ]
+        return {c: docs["ids" if c == "doc_id" else c][pos] for c in cols}
 
-    def facet_rows(
-        self, groups, msm: int, options, keys=("lang",), size: int = 10,
-        min_doc_count: int = 1,
-    ) -> list[tuple]:
-        """ES terms-agg over the FULL match set, not the top-k page (the
-        aggs-on-query shape; beyond reference — the reference's ES queries
-        attach aggregations the same way). Rows ``(facet, value,
-        doc_count)``, buckets per facet ordered (doc_count desc, value asc),
-        nulls excluded — the exact terms-agg contract tag_stats pins for
-        the whole corpus, here scoped to the query's matches. Serving twin
-        of engine.facets; matched-set semantics identical to the Spark
-        match_set (>= msm distinct REQUIRED clauses, then doc-side
-        filters)."""
-        docs = self._load_docs()
-        pos = self._match_positions(groups, msm, options)
-        out: list[tuple] = []
-        for key in keys:
-            if key not in docs or docs[key] is None:
-                raise ValueError(
-                    f"unknown facet key {key!r}; serving facets cover "
-                    f"{sorted(k for k in docs if k != 'ids')}"
-                )
-            vc = pd.Series(docs[key][pos]).value_counts(dropna=True)
-            buckets = sorted(
-                (
-                    (str(v), int(c))
-                    for v, c in vc.items()
-                    if v is not None and int(c) >= min_doc_count
-                ),
-                key=lambda b: (-b[1], b[0]),
-            )
-            out.extend((key, v, c) for v, c in buckets[:size])
-        return out
-
-    def cardinality_parts(
-        self, groups, msm: int, options, key: str = "lang",
-        metric: str = "repo",
-    ) -> tuple[dict, set]:
-        """Partials behind the cardinality sub-agg: per-bucket doc counts
-        plus the distinct (bucket, metric) pair set — the merge unit for
-        multi-generation serving (counts of disjoint live docs SUM; distinct
-        sets must UNION before counting, a count of counts would overcount
-        values present in several generations)."""
-        docs = self._load_docs()
-        for c in (key, metric):
-            if c not in docs or docs[c] is None:
-                raise ValueError(
-                    f"unknown column {c!r}; serving covers "
-                    f"{sorted(k for k in docs if k != 'ids')}"
-                )
-        pos = self._match_positions(groups, msm, options)
-        kv = docs[key][pos]
-        mv = docs[metric][pos]
-        counts: dict[str, int] = {}
-        pairs: set[tuple[str, str]] = set()
-        for k, m in zip(kv, mv):
-            if k is None:
-                continue
-            ks = str(k)
-            counts[ks] = counts.get(ks, 0) + 1
-            if m is not None:
-                pairs.add((ks, str(m)))
-        return counts, pairs
-
-    def cardinality_rows(
-        self, groups, msm: int, options, key: str = "lang",
-        metric: str = "repo",
-    ) -> list[tuple]:
-        """ES terms+cardinality twin of engine.facet_cardinality: (value,
-        doc_count, n_distinct) value-ascending over the full match set."""
-        counts, pairs = self.cardinality_parts(
-            groups, msm, options, key, metric
+    def ranked_hits(self, groups, msm: int, options) -> list[Hit]:
+        """The decode-all rung: every gated hit up to ``options.k`` in rank
+        order, never block-max pruned (top_hits reads past the page)."""
+        return self.combine_parts(
+            self.group_parts(groups, options), groups, msm, options
         )
-        return rows_from_cardinality_parts(counts, pairs)
-
-    def composite_rows(
-        self, groups, msm: int, options, keys=("lang",), size: int = 10,
-        after: tuple[str, str] | None = None,
-    ) -> list[tuple]:
-        """ES composite-agg twin of engine.composite_buckets: buckets over
-        the full match set ordered by (facet asc, value asc), resumed
-        strictly after the ``after`` (facet, value) cursor, ``size`` per
-        page. Null keys excluded."""
-        docs = self._load_docs()
-        pos = self._match_positions(groups, msm, options)
-        out: list[tuple] = []
-        for key in keys:
-            if key not in docs or docs[key] is None:
-                raise ValueError(
-                    f"unknown facet key {key!r}; serving facets cover "
-                    f"{sorted(k for k in docs if k != 'ids')}"
-                )
-            vc = pd.Series(docs[key][pos]).value_counts(dropna=True)
-            out.extend(
-                (key, str(v), int(c))
-                for v, c in vc.items()
-                if v is not None
-            )
-        out.sort(key=lambda b: (b[0], b[1]))
-        if after is not None:
-            af, av = after
-            out = [b for b in out if (b[0], b[1]) > (af, av)]
-        return out[:size]
-
-    def top_hits_rows(
-        self, groups, msm: int, options, key: str = "lang", n: int = 3
-    ) -> list[tuple]:
-        """ES top_hits-per-bucket twin of engine.top_hits: the decode-all
-        rung UNCUT (k lifted to the corpus bound), then the running top-n
-        per bucket in rank order. Rows (value, bucket_rank, doc_id, score),
-        ordered (value asc, bucket_rank asc)."""
-        if key not in ("repo", "path", "lang"):
-            raise ValueError(
-                f"top_hits: unknown key {key!r} (allowed: repo, path, lang)"
-            )
-        import dataclasses as _dc
-
-        uncut = _dc.replace(options, k=1 << 31, after=None)
-        hits = self.combine_parts(
-            self.group_parts(groups, uncut), groups, msm, uncut
-        )
-        buckets: dict[str, list] = {}
-        for h in hits:  # already rank-ordered (round(score,9) desc, doc_id)
-            v = getattr(h, key)
-            if v is None:
-                continue
-            lst = buckets.setdefault(str(v), [])
-            if len(lst) < n:
-                lst.append(h)
-        return [
-            (v, i + 1, int(h.doc_id), float(h.score))
-            for v in sorted(buckets)
-            for i, h in enumerate(buckets[v])
-        ]
 
     def explain_hits(self, ids, groups) -> list[tuple]:
         """ES Explain-API analog (serving side): per-term BM25 contributions
@@ -1013,13 +1012,6 @@ class LocalExecutor:
                     )
         rows.sort()
         return rows
-
-    def explain_rung(self, groups, msm: int, options) -> list[tuple]:
-        """Explain rows for the rung's top-k page (the ``explain=true``
-        search shape): run the ordinary rung, then explain_hits on the
-        winners."""
-        hits = self.search_rung(groups, msm, options)
-        return self.explain_hits([h.doc_id for h in hits], groups)
 
     def group_max_scores(self, ids, groups) -> dict[int, float]:
         """Per-doc sum over groups of max(score x weight) for SPECIFIC docs
@@ -1376,10 +1368,7 @@ class LocalExecutor:
         key9 = np.round(score, 9)
         coll = getattr(options, "collapse", None)
         if coll:
-            if coll not in ("repo", "path", "lang"):
-                raise ValueError(
-                    f"collapse: unknown key {coll!r} (allowed: repo, path, lang)"
-                )
+            check_agg_keys("collapse", (coll,))
             # keep each key's best by the rank key, BEFORE the cursor —
             # identical to finalize_ranked's window (null keys collapse
             # together; pandas duplicated() handles None cleanly)
@@ -1451,10 +1440,7 @@ class LocalExecutor:
                 m &= ex_ids[pos] != docs["ids"]
         coll = getattr(options, "collapse", None)
         if coll:
-            if coll not in ("repo", "path", "lang"):
-                raise ValueError(
-                    f"collapse: unknown key {coll!r} (allowed: repo, path, lang)"
-                )
+            check_agg_keys("collapse", (coll,))
             # constant scores: per-key best = lowest doc_id; collapse
             # BEFORE the cursor (docs arrays are doc_id-sorted, so first
             # occurrence in array order IS the per-key minimum)

@@ -106,9 +106,19 @@ def test_facet_bucket_order_and_size(local_eng):
 
 
 def test_facet_unknown_key_raises(spark_eng, local_eng):
+    """One allowed key set (repo, path, lang) on both tiers: internal docs
+    columns never bucket, for facets, composite and cardinality alike."""
+    g, o = [_grp(0, ["postings"])], SearchOptions()
     for eng in (spark_eng, local_eng):
-        with pytest.raises(ValueError, match="facet"):
-            eng.facets([_grp(0, ["postings"])], 1, SearchOptions(), keys=("nope",))
+        for bad in ("nope", "name_ordinal", "ids", "doc_id"):
+            with pytest.raises(ValueError, match="facet"):
+                eng.facets(g, 1, o, keys=("lang", bad))
+            with pytest.raises(ValueError, match="unknown"):
+                eng.composite_buckets(g, 1, o, keys=(bad,))
+            with pytest.raises(ValueError, match="unknown"):
+                eng.facet_cardinality(g, 1, o, key=bad, metric="repo")
+            with pytest.raises(ValueError, match="unknown"):
+                eng.facet_cardinality(g, 1, o, key="lang", metric=bad)
 
 
 def test_facets_multigen(spark, index, tmp_path_factory):
@@ -133,6 +143,28 @@ def test_facets_multigen(spark, index, tmp_path_factory):
     assert by_val.get("zig") == 30
     # total live docs unchanged: 30 upserts tombstone their 30 old copies
     assert sum(by_val.values()) == N_DOCS
+
+    # field sort across generations == a brute force over the live docs
+    live = [
+        (int(r.doc_id), r.repo, r.path, r.lang)
+        for r in segs.live_docs(spark, root)
+        .select("doc_id", "repo", "path", "lang")
+        .collect()
+    ]
+    pre = "src/pkg1/"
+    want_all = [r for r in live if r[2].startswith(pre)]
+    for by, asc in (("path", True), ("path", False), ("doc_id", False)):
+        col = {"doc_id": 0, "path": 2}[by]
+        # (field in the asked direction, doc_id asc): stable sorts
+        want = sorted(sorted(want_all), key=lambda r: r[col], reverse=not asc)
+        opts = SearchOptions(k=7, path_prefix=pre)
+        page1 = meng.search_sorted([], 0, opts, by=by, ascending=asc)
+        assert len(want) > 14 and page1 == want[:7], (by, asc)
+        last = page1[-1]
+        page2 = meng.search_sorted(
+            [], 0, opts, by=by, ascending=asc, after=(last[col], last[0])
+        )
+        assert page2 == want[7:14], (by, asc)
 
 
 def test_http_facet_param(local_eng):

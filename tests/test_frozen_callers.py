@@ -49,22 +49,56 @@ def _calls(path: str):
             yield name, node
 
 
+def _executor_calls(path: str):
+    """``<engine>._local.<method>(...)`` calls: the engine's serving
+    executor is a LocalExecutor on every index the benchmark builds."""
+    tree = ast.parse(open(path).read(), filename=path)
+    for node in ast.walk(tree):
+        fn = node.func if isinstance(node, ast.Call) else None
+        if (
+            isinstance(fn, ast.Attribute)
+            and isinstance(fn.value, ast.Attribute)
+            and fn.value.attr == "_local"
+        ):
+            yield fn.attr, node
+
+
+def _bind(fname, label, fn, call, self_arg=()):
+    sig = inspect.signature(fn)
+    starred = any(isinstance(a, ast.Starred) for a in call.args)
+    kwargs = {k.arg: None for k in call.keywords if k.arg is not None}
+    open_kw = any(k.arg is None for k in call.keywords)
+    args = [*self_arg, *[None] * (0 if starred else len(call.args))]
+    bind = sig.bind_partial if (starred or open_kw) else sig.bind
+    try:
+        bind(*args, **kwargs)
+    except TypeError as e:
+        pytest.fail(f"{fname}:{call.lineno} {label}(...) no longer binds: {e}")
+
+
 @pytest.mark.parametrize("fname", FROZEN)
 def test_frozen_calls_bind(fname):
     n_checked = 0
     for name, call in _calls(os.path.join(ROOT, fname)):
-        sig = inspect.signature(ENTRY_POINTS[name])
-        starred = any(isinstance(a, ast.Starred) for a in call.args)
-        kwargs = {k.arg: None for k in call.keywords if k.arg is not None}
-        open_kw = any(k.arg is None for k in call.keywords)
-        args = [None] * (0 if starred else len(call.args))
-        bind = sig.bind_partial if (starred or open_kw) else sig.bind
-        try:
-            bind(*args, **kwargs)
-        except TypeError as e:
-            pytest.fail(f"{fname}:{call.lineno} {name}(...) no longer binds: {e}")
+        _bind(fname, name, ENTRY_POINTS[name], call)
         n_checked += 1
     assert n_checked > 0
+
+
+def test_frozen_executor_calls_bind():
+    """bench.py calls the serving executor's methods directly; each call
+    binds against the LocalExecutor method (inherited or its own)."""
+    seen = set()
+    for meth, call in _executor_calls(os.path.join(ROOT, "bench.py")):
+        fn = getattr(fastpath.LocalExecutor, meth, None)
+        if fn is None:
+            pytest.fail(f"bench.py:{call.lineno} LocalExecutor.{meth} is gone")
+        _bind("bench.py", f"LocalExecutor.{meth}", fn, call, self_arg=(None,))
+        seen.add(meth)
+    assert seen >= {
+        "facet_rows", "search_sorted_rows", "explain_rung",
+        "search_allowed", "search_rung",
+    }
 
 
 def test_codec_decoders_take_n_second():

@@ -90,9 +90,10 @@ def test_mlt_min_doc_freq_gate(local_eng, seed_text):
     assert all(df >= 5 for df in dfm.values())
 
 
-def test_mlt_multigen_df(spark, index, tmp_path_factory):
-    """df_for_terms over a multi-generation index sums per-generation df
-    (df-with-deletes, like suggest)."""
+@pytest.fixture(scope="module")
+def multi_eng(spark, index, tmp_path_factory):
+    """Spark-free engine over the base plus one segment that re-upserts its
+    first 20 docs with a marker token appended."""
     import shutil
 
     from gazetteer_search_spark.index import segments as segs
@@ -107,7 +108,13 @@ def test_mlt_multigen_df(spark, index, tmp_path_factory):
         .withColumn("commit", F.sha1(F.concat_ws("-", "path", F.lit("v2"))))
     )
     segs.add_segment(spark, upd, root, n_buckets=2)
-    eng = segs.open_multi_search(root)
+    return segs.open_multi_search(root)
+
+
+def test_mlt_multigen_df(multi_eng):
+    """df_for_terms over a multi-generation index sums per-generation df
+    (df-with-deletes, like suggest)."""
+    eng = multi_eng
     dfm = eng._df_for_terms(["mltmarker"])
     assert dfm.get("mltmarker") == 20
     # and MLT over the multi-gen engine finds the updated docs
@@ -115,6 +122,39 @@ def test_mlt_multigen_df(spark, index, tmp_path_factory):
         eng.mlt_groups("mltmarker mltmarker", max_terms=5), 1, SearchOptions()
     )
     assert rows and all(r.doc_id is not None for r in rows)
+
+
+def test_multigen_stats_pair_summed_df_with_summed_n(multi_eng):
+    """The summed df counts superseded copies, so the n it is divided by
+    counts them too (Lucene's maxDoc): the generations' n_docs summed, not
+    the base's alone. 'user' is in every synthetic doc, so its summed df
+    exceeds the base's n_docs."""
+    import math
+
+    from gazetteer_search_spark.search.engine import TermGroup
+
+    eng = multi_eng
+    n = N_DOCS + 20  # base + segment docs
+    df = eng._df_for_terms(["user", "name", "block"])
+    assert df["user"] == df["name"] == n > eng.index.n_docs
+    # MLT idf stays positive: of two equally common terms the one with the
+    # higher tf ranks first
+    got = [g.terms[0] for g in eng.mlt_groups("user user name")]
+    assert got == ["user", "name"]
+    # phrase suggester: a unigram probability never exceeds 1
+    (score,) = [s for p, s in eng.phrase_suggest("usr", k=5) if p == "user"]
+    assert score == round(math.log((df["user"] + 0.5) / (n + 1.0)), 6) <= 0
+    # significant text: the background share is df / n
+    rows = eng.significant_text_rows(
+        [TermGroup(group_id=0, terms=("block",), required=True)], 1,
+        SearchOptions(), sample_size=50,
+    )
+    by_term = {t: (c, bg, sc) for t, c, bg, sc in rows}
+    c, bg, sc = by_term["block"]
+    assert bg == df["block"]
+    fgp, bgp = c / 50, bg / n
+    assert sc == pytest.approx((fgp - bgp) * (fgp / bgp), abs=1e-6)
+    assert sum(g.n_docs for g in eng._local.generations) == n
 
 
 def test_http_mlt_route(local_eng):
